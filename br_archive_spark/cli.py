@@ -444,18 +444,13 @@ def cmd_scan(args) -> int:
     per-chunk ``null_count`` lane instead (r5). Specs come from the
     manifest itself (``manifest_specs``); prints prune stats +
     matching rows."""
-    from functools import reduce
-    from operator import or_
-
-    from .operators.decode import (_fstats_disjoint, _notnull_disjoint,
-                                   _null_disjoint, _sstats_disjoint,
-                                   _stats_disjoint, manifest_specs,
+    from .operators.decode import (_check_predicates, _scan_drop,
+                                   manifest_specs, scan_estimate,
                                    scan_where)
 
     spark = _spark(args)
     man = spark.read.parquet(args.input)
     specs = manifest_specs(man)
-    kind = dict(specs).get(args.column)
     want_null = getattr(args, "null", False)
     want_not_null = getattr(args, "not_null", False)
     if (args.lo is None) != (args.hi is None):
@@ -469,57 +464,35 @@ def cmd_scan(args) -> int:
         print("scan: --null and --not-null are contradictory",
               file=sys.stderr)
         return 2
+    # the library's own predicate check: bounds coerce to the lane unit
+    # (int lanes snap inward), and a bound the lane cannot compare is a
+    # usage error
+    try:
+        kinds, bands, null_cols, not_null_cols, _ = _check_predicates(
+            "scan", specs,
+            [] if args.lo is None else [(args.column, args.lo, args.hi)],
+            [args.column] if want_null else [],
+            [args.column] if want_not_null else [], {})
+    except ValueError as e:
+        print(e, file=sys.stderr)
+        return 2
     if getattr(args, "estimate", False):
         # planner probe: cost + result-count bracket from the
         # manifest alone, nothing decoded
-        from .operators.decode import scan_estimate
-
-        if args.lo is not None:
-            if kind == "float":
-                b = (args.column, float(args.lo), float(args.hi))
-            elif kind == "string":
-                b = (args.column, str(args.lo), str(args.hi))
-            else:
-                b = (args.column, int(float(args.lo)),
-                     int(float(args.hi)))
-            est_bands = [b]
-        else:
-            est_bands = []
-        est = scan_estimate(
-            man, est_bands, specs=specs,
-            null_cols=[args.column] if want_null else None,
-            not_null_cols=[args.column] if want_not_null else None)
+        est = scan_estimate(man, bands, specs=specs, null_cols=null_cols,
+                            not_null_cols=not_null_cols)
         est["column"] = args.column
         est["rows_bracket"] = list(est["rows_bracket"])
         print(json.dumps(est))
         return 0
-    bands, disjoints = [], []
-    lo = hi = None
-    if args.lo is not None:
-        if kind == "float":
-            lo, hi = float(args.lo), float(args.hi)
-            disjoints.append(_fstats_disjoint(args.column, lo, hi))
-        elif kind == "string":
-            lo, hi = str(args.lo), str(args.hi)
-            disjoints.append(_sstats_disjoint(args.column, lo, hi))
-        else:
-            lo, hi = int(float(args.lo)), int(float(args.hi))
-            disjoints.append(_stats_disjoint(args.column, lo, hi))
-        bands.append((args.column, lo, hi))
-    if want_null:
-        disjoints.append(_null_disjoint(args.column))
-    if want_not_null and kind is not None \
-            and not kind.endswith("_list"):
-        disjoints.append(_notnull_disjoint(args.column))
     total = man.count()
-    surviving = man.where(~reduce(or_, disjoints)).count() \
-        if disjoints else total
+    drop = _scan_drop(man, kinds, bands, null_cols, not_null_cols, {})
+    surviving = man.where(~drop).count() if drop is not None else total
     rows = scan_where(man, bands, specs=specs, with_n_tok=False,
                       global_dict=_load_gdict(args.global_dict),
-                      null_cols=[args.column] if want_null else None,
-                      not_null_cols=[args.column] if want_not_null
-                      else None)
+                      null_cols=null_cols, not_null_cols=not_null_cols)
     n = rows.count()
+    lo, hi = bands[0][1:] if bands else (None, None)
     out = {"column": args.column, "lo": lo, "hi": hi,
            "null": bool(want_null), "not_null": bool(want_not_null),
            "chunks_total": total, "chunks_decoded": surviving,
@@ -547,8 +520,27 @@ def cmd_agg(args) -> int:
     from .operators.decode import (agg_encoded, hist_encoded,
                                    ndv_encoded, topk_encoded)
 
+    band = getattr(args, "count_between", None)
+    if band and band.count(":") != 1:
+        print(f"agg: --count-between {band!r}: expected LO:HI",
+              file=sys.stderr)
+        return 2
     spark = _spark(args)
     man = spark.read.parquet(args.input)
+    if band:
+        from .operators.decode import manifest_specs
+        from .operators.encode import band_class, coerce_band
+
+        lo, hi = band.split(":")
+        cls = band_class(dict(manifest_specs(man)).get(args.column, ""))
+        if cls in ("int", "float"):
+            # other kinds: hist_encoded names the refusal
+            try:
+                lo, hi = coerce_band(cls, lo, hi)
+            except ValueError as e:
+                print(f"agg: --count-between {band!r}: {e}",
+                      file=sys.stderr)
+                return 2
     row = agg_encoded(man, args.column).collect()[0]
     out = {"column": args.column, **row.asDict()}
     if getattr(args, "ndv", False):
@@ -565,13 +557,7 @@ def cmd_agg(args) -> int:
         vlo, vhi = quantile_encoded(man, args.column, float(qq))
         out["quantile"] = {"q": float(qq),
                            "value_min": vlo, "value_max": vhi}
-    band = getattr(args, "count_between", None)
     if band:
-        lo_s, hi_s = band.rsplit(":", 1)
-        lo = float(lo_s) if "." in lo_s or "e" in lo_s.lower() \
-            else int(lo_s)
-        hi = float(hi_s) if "." in hi_s or "e" in hi_s.lower() \
-            else int(hi_s)
         cmin, cmax = hist_encoded(man, args.column, lo, hi)
         out["count_between"] = {"lo": lo, "hi": hi,
                                 "count_min": cmin, "count_max": cmax}
@@ -602,7 +588,7 @@ def cmd_evolve(args) -> int:
         man = delete_rows(man, args.delete, key=args.key)
     if dw:
         col, lo, hi = dw.split(":")
-        man = delete_where(man, col, float(lo), float(hi))
+        man = delete_where(man, col, lo, hi)
     if args.drop:
         man = drop_columns(man, args.drop)
     for spec in args.rename or []:

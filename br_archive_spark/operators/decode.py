@@ -20,14 +20,20 @@ the reference's trailing-CRC check on extract
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial, reduce
+from operator import and_, or_
 
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
+from .bloom import bloom_sizes, probe_positions, probe_positions_int
 from .chunk import decode_column
+from .encode import (BAND_LANES, MANIFEST_SPARK_SCHEMA, TOKEN_SPECS,
+                     band_class, coerce_band)
 from .fsutil import (ensure_dir, file_size, join_path, path_tag,
                      read_parquet, write_parquet_atomic)
 
@@ -147,8 +153,17 @@ def _rebuild(kind: str, data, n_rows: int, validity=None) -> pa.Array:
     raise ValueError(kind)
 
 
+def _emits_n_tok(specs: list[tuple[str, str]], with_n_tok: bool) -> bool:
+    """Whether a decode of ``specs`` carries ``n_tok``: the length of
+    the (last) int_list column, so a decode without one has no n_tok
+    to emit — derived rather than failing deep in the UDF with an
+    opaque NoneType error."""
+    return with_n_tok and any(k == "int_list" for _, k in specs)
+
+
 def _make_decode_fn(specs: list[tuple[str, str]], with_n_tok: bool,
                     verify_checksums: bool, global_dict=None):
+    with_n_tok = _emits_n_tok(specs, with_n_tok)
     fields = [pa.field(name, _arrow_type(kind)) for name, kind in specs]
     if with_n_tok:
         fields.append(pa.field("n_tok", pa.int32()))
@@ -201,8 +216,6 @@ def _zone_prune(encoded: DataFrame, key: str, lo: str, hi: str) -> DataFrame:
     pre-r3 manifest, or a table with no string column) is kept, never
     silently filtered out (ADVICE r2 #1 — pruning on the wrong column's
     bounds drops matching rows with no error)."""
-    from pyspark.sql import functions as F
-
     if "key_col" not in encoded.columns:
         return encoded
     # key_col can be NULL inside a non-null manifest column (e.g. after
@@ -233,13 +246,6 @@ def _bloom_prune(encoded: DataFrame, key: str,
     bit test stays/goes accordingly — correctness never depends on
     the bloom (false positives only cost a wasted decode).
     """
-    from functools import reduce as _reduce
-    from operator import or_
-
-    from pyspark.sql import functions as F
-
-    from .bloom import bloom_sizes, probe_positions
-
     if "key_bloom" not in encoded.columns \
             or "key_col" not in encoded.columns or not doc_ids:
         return encoded
@@ -249,30 +255,12 @@ def _bloom_prune(encoded: DataFrame, key: str,
         # plan (driver planning time, codegen 64KB method limit) past
         # what the pruning saves — bulk probes keep zone maps only
         return encoded
-
-    def probe_for_size(kstr: str, m_bits: int):
-        # exact wrap-around arithmetic happens HERE in Python; the
-        # plan sees only int literals (ANSI-safe, constant-foldable)
-        tests = [
-            F.element_at(F.col("key_bloom"), F.lit(widx))
-            .bitwiseAND(F.lit(mask)) != 0
-            for widx, mask in probe_positions(kstr, m_bits)]
-        return _reduce(lambda a, b: a & b, tests)
-
-    probes = []
-    for kstr in doc_ids:
-        sized = None
-        for m_bits in bloom_sizes():          # 7 power-of-two sizes
-            cond = F.size("key_bloom") == m_bits // 64
-            hit = probe_for_size(str(kstr), m_bits)
-            sized = F.when(cond, hit) if sized is None \
-                else sized.when(cond, hit)
-        probes.append(sized.otherwise(F.lit(True)))  # unknown size: keep
     return encoded.where(
         F.col("key_col").isNull()
         | (F.col("key_col") != key)
         | F.col("key_bloom").isNull()
-        | _reduce(or_, probes))
+        | _bloom_hits(F.col("key_bloom"), doc_ids,
+                      lambda k, m: probe_positions(str(k), m)))
 
 
 def lookup_docs(encoded: DataFrame, doc_ids: list[str],
@@ -295,8 +283,6 @@ def lookup_docs(encoded: DataFrame, doc_ids: list[str],
     (``src/io/lib_bra_io_file_ctx.c:596-602``) plus FSST's
     random-access promise (strings decodable without bulk context).
     """
-    from pyspark.sql import functions as F
-
     lo, hi = min(doc_ids), max(doc_ids)
     pruned = _bloom_prune(_zone_prune(encoded, key, lo, hi),
                           key, doc_ids)
@@ -321,8 +307,6 @@ def lookup_range(encoded: DataFrame, lo: str, hi: str,
     near-disjoint zone maps) a narrow range decodes O(matching
     chunks), not the table.
     """
-    from pyspark.sql import functions as F
-
     pruned = _zone_prune(encoded, key, lo, hi)
     dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
                        global_dict=global_dict)
@@ -343,94 +327,65 @@ def manifest_specs(encoded: DataFrame) -> list[tuple[str, str]]:
     return [(s["name"], s["kind"]) for s in row[0]]
 
 
-def _has_numeric_stats(encoded: DataFrame) -> bool:
-    """Whether this manifest's ``column_stats`` schema carries the r3
-    numeric lanes (vmin/vmax/...). Manifests written by earlier builds
-    lack the fields entirely — consumers must degrade (no pruning /
-    clear error), not throw an unresolved-column AnalysisException."""
+def _has_lane(encoded: DataFrame, field: str) -> bool:
+    """Whether this manifest's ``column_stats`` carries the lane
+    ``field`` (a ``STATS_LANES`` name). Manifests written before a
+    lane existed lack the field entirely — consumers must degrade (no
+    pruning / a clear refusal), not throw an unresolved-column
+    AnalysisException."""
     if "column_stats" not in encoded.columns:
         return False
     elem = encoded.schema["column_stats"].dataType.elementType
-    return "vmin" in elem.fieldNames()
+    return field in elem.fieldNames()
 
 
-def _stats_disjoint(column: str, lo: int, hi: int):
+def _stats_of(column: str):
+    """The chunk's ``column_stats`` entry for ``column``."""
+    # NB: F.filter treats a 2-arg lambda as (element, index), so
+    # bind the column name via a closure, never a default arg
+    return F.element_at(
+        F.filter("column_stats", lambda e: e["name"] == F.lit(column)), 1)
+
+
+def _lanes_of(encoded: DataFrame, column: str, fields,
+              suffix: str = "") -> list:
+    """``column``'s stats lanes ``fields`` as columns aliased
+    ``field + suffix`` — a null typed from the lane table for each
+    lane this manifest predates."""
+    s = _stats_of(column)
+    elem = MANIFEST_SPARK_SCHEMA["column_stats"].dataType.elementType
+    return [(s[f] if _has_lane(encoded, f)
+             else F.lit(None).cast(elem[f].dataType)).alias(f + suffix)
+            for f in fields]
+
+
+def _band_disjoint(cls: str, column: str, lo, hi):
     """Predicate: this chunk's ``column_stats`` PROVE the chunk has no
-    value of ``column`` in ``[lo, hi]``. Null bounds (string/float
-    kinds, all-null chunks, columns missing from the encode specs)
-    never prove anything — the chunk is kept and the residual filter
-    decides (the ADVICE-r2 silent-miss rule: pruning must only ever
-    act on bounds that are known to describe the probed column)."""
-    from pyspark.sql import functions as F
-
+    value of ``column`` in ``[lo, hi]``, over the range-band lanes of
+    kind class ``cls`` (``BAND_LANES``; bounds coerced to the lane
+    unit). A null lower bound (other kinds, all-null/all-NaN chunks,
+    columns missing from the encode specs) never proves anything —
+    the chunk is kept and the residual filter decides (the ADVICE-r2
+    silent-miss rule: pruning must only ever act on bounds that are
+    known to describe the probed column). A null upper bound beside
+    a lower one means "unbounded above" (the string lane's
+    truncate(16) rule), so the two prune arms gate independently:
+    ``lower > hi`` always proves disjointness, ``upper < lo`` only
+    when the upper bound is present. String comparisons are
+    binary-collation, the order the bounds were computed in."""
+    lanes = BAND_LANES[cls]
+    lo, hi = coerce_band(cls, lo, hi)
     return F.exists(
         "column_stats",
         lambda s: (s["name"] == F.lit(column))
-        & s["vmin"].isNotNull()
-        & ((s["vmin"] > F.lit(int(hi))) | (s["vmax"] < F.lit(int(lo)))))
+        & s[lanes.lo].isNotNull()
+        & ((s[lanes.lo] > F.lit(hi))
+           | (s[lanes.hi].isNotNull() & (s[lanes.hi] < F.lit(lo)))))
 
 
-def _has_float_stats(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r4 float lanes
-    (``fmin``/``fmax``) — older manifests degrade to no float pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "fmin" in elem.fieldNames()
-
-
-def _fstats_disjoint(column: str, lo: float, hi: float):
-    """Float twin of :func:`_stats_disjoint` over the typed double
-    bounds. Null bounds (all-null/all-NaN chunks, pre-r4 rows) never
-    prove anything — the chunk is kept and the residual filter
-    decides."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["fmin"].isNotNull()
-        & ((s["fmin"] > F.lit(float(hi)))
-           | (s["fmax"] < F.lit(float(lo)))))
-
-
-def _has_string_stats(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 string lanes
-    (``smin``/``smax``) — older manifests degrade to no string
-    pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "smin" in elem.fieldNames()
-
-
-def _sstats_disjoint(column: str, lo: str, hi: str):
-    """String twin of :func:`_stats_disjoint` over the truncate(16)
-    bounds. ``smin`` is a (possibly loose) LOWER bound and ``smax`` an
-    UPPER bound or null for "unbounded above" (encode-side
-    ``_trunc_upper`` found no incrementable codepoint) — so the two
-    prune arms gate independently: ``smin > hi`` always proves
-    disjointness; ``smax < lo`` only when smax is present. Both
-    comparisons are binary-collation string compares, the same total
-    order the bounds were computed in (UTF-8 bytes == codepoints)."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["smin"].isNotNull()
-        & ((s["smin"] > F.lit(hi))
-           | (s["smax"].isNotNull() & (s["smax"] < F.lit(lo)))))
-
-
-def _has_null_stats(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the ``null_count`` lane —
-    written since the r3 stats schema; older manifests degrade to no
-    null-predicate pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "null_count" in elem.fieldNames()
+_stats_disjoint = partial(_band_disjoint, "int")
+_fstats_disjoint = partial(_band_disjoint, "float")
+_sstats_disjoint = partial(_band_disjoint, "string")
 
 
 def _null_disjoint(column: str):
@@ -443,8 +398,6 @@ def _null_disjoint(column: str):
     still implies zero row nulls. A missing stats entry or a null
     ``null_count`` never proves anything — the chunk is kept and the
     residual filter decides."""
-    from pyspark.sql import functions as F
-
     return F.exists(
         "column_stats",
         lambda s: (s["name"] == F.lit(column))
@@ -460,8 +413,6 @@ def _notnull_disjoint(column: str):
     conflates row and element nulls, so equality with ``n_rows`` does
     not prove all-null rows — callers must not emit this term for
     list kinds (keeping the chunk is always correct)."""
-    from pyspark.sql import functions as F
-
     return F.exists(
         "column_stats",
         lambda s: (s["name"] == F.lit(column))
@@ -469,87 +420,53 @@ def _notnull_disjoint(column: str):
         & (s["null_count"] == F.col("n_rows")))
 
 
-def _has_column_blooms(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 per-column ``bloom``
-    membership sidecar — older manifests degrade to zone-map-only
-    pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "bloom" in elem.fieldNames()
-
-
-def _int_bloom_keep(column: str, values: list[int]):
-    """Predicate: this chunk MAY contain some probe value of the int
-    column, per its ``column_stats.bloom`` sidecar — the int twin of
-    :func:`_bloom_prune`'s probe. Pure Catalyst: per probe value the
-    driver contributes ``(word, mask)`` int literals per geometry
-    (wrap-around uint64 arithmetic stays in Python — ANSI-safe plan);
-    a missing stats entry, a null bloom (pre-r5 manifest, non-int
-    kind, ``bloom=False`` encode), or an unknown geometry keeps the
-    chunk — correctness never depends on the bloom."""
-    from functools import reduce as _reduce
-    from operator import or_
-
-    from pyspark.sql import functions as F
-
-    from .bloom import bloom_sizes, probe_positions_int
-
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    blm = s["bloom"]
+def _bloom_hits(words, values, positions):
+    """OR over the probe ``values`` of "may be in the bloom ``words``".
+    Pure Catalyst: per probe value the driver contributes ``(word,
+    mask)`` int literals per geometry from ``positions(v, m_bits)`` —
+    wrap-around uint64 arithmetic stays in Python (ANSI-safe,
+    constant-foldable plan) while Java long bit tests match the
+    builder's uint64 math; an unknown geometry keeps."""
     probes = []
     for v in values:
         sized = None
-        for m_bits in bloom_sizes():
-            cond = F.size(blm) == m_bits // 64
-            tests = [
-                F.element_at(blm, F.lit(widx))
+        for m_bits in bloom_sizes():          # 7 power-of-two sizes
+            cond = F.size(words) == m_bits // 64
+            hit = reduce(and_, [
+                F.element_at(words, F.lit(widx))
                 .bitwiseAND(F.lit(mask)) != 0
-                for widx, mask in probe_positions_int(int(v), m_bits)]
-            hit = _reduce(lambda a, b: a & b, tests)
+                for widx, mask in positions(v, m_bits)])
             sized = F.when(cond, hit) if sized is None \
                 else sized.when(cond, hit)
         probes.append(sized.otherwise(F.lit(True)))
-    return s.isNull() | blm.isNull() | _reduce(or_, probes)
+    return reduce(or_, probes)
 
 
-def _str_bloom_keep(column: str, values: list):
-    """String/binary twin of :func:`_int_bloom_keep`: this chunk MAY
-    contain some probe value, per the column's ``column_stats.bloom``
-    membership sidecar (r5 — built over the chunk's distinct values
-    with the key-bloom hash family; ``bytes`` probes hash the raw
-    bytes, ``str`` probes their UTF-8). Probe hashing happens
-    driver-side per literal (``probe_positions``); the plan is pure
-    Catalyst bit tests. Missing entry / null bloom / unknown geometry
-    keeps the chunk — correctness never depends on the bloom."""
-    from functools import reduce as _reduce
-    from operator import or_
+def _bloom_keep(positions, column: str, values: list):
+    """Predicate: this chunk MAY contain some probe value of
+    ``column``, per its ``column_stats.bloom`` membership sidecar (r5
+    — built over the chunk's distinct lane values), probed at
+    ``positions``. A missing stats entry, a null bloom (pre-r5
+    manifest, a kind without a bloom, ``bloom=False`` encode), or an
+    unknown geometry keeps the chunk — correctness never depends on
+    the bloom."""
+    s = _stats_of(column)
+    return s.isNull() | s["bloom"].isNull() \
+        | _bloom_hits(s["bloom"], values, positions)
 
-    from pyspark.sql import functions as F
 
-    from .bloom import bloom_sizes, probe_positions
+# int lanes probe the codec-lane int; string/binary lanes the key-bloom
+# hash family over the UTF-8 (``str``) or raw (``bytes``) value
+_int_bloom_keep = partial(
+    _bloom_keep, lambda v, m: probe_positions_int(int(v), m))
+_str_bloom_keep = partial(
+    _bloom_keep, lambda v, m: probe_positions(
+        v if isinstance(v, (bytes, bytearray)) else str(v), m))
 
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    blm = s["bloom"]
-    probes = []
-    for v in values:
-        sized = None
-        for m_bits in bloom_sizes():
-            cond = F.size(blm) == m_bits // 64
-            probe = v if isinstance(v, (bytes, bytearray)) else str(v)
-            tests = [
-                F.element_at(blm, F.lit(widx))
-                .bitwiseAND(F.lit(mask)) != 0
-                for widx, mask in probe_positions(probe, m_bits)]
-            hit = _reduce(lambda a, b: a & b, tests)
-            sized = F.when(cond, hit) if sized is None \
-                else sized.when(cond, hit)
-        probes.append(sized.otherwise(F.lit(True)))
-    return s.isNull() | blm.isNull() | _reduce(or_, probes)
+
+def _bloom_keep_for(kind: str):
+    return _str_bloom_keep if kind in ("string", "binary") \
+        else _int_bloom_keep
 
 
 def lookup_values(encoded: DataFrame, column: str, values: list[int],
@@ -561,7 +478,8 @@ def lookup_values(encoded: DataFrame, column: str, values: list[int],
     ``values`` (codec-lane units: days for date, epoch micros for
     timestamp, unscaled int for decimal).
 
-    Pruning before any payload decode, mirroring :func:`lookup_docs`:
+    Exactly :func:`scan_where` with ``isin={column: values}`` —
+    pruning before any payload decode, mirroring :func:`lookup_docs`:
 
     1. zone map — drop chunks whose ``vmin``/``vmax`` exclude the
        probe band ``[min(values), max(values)]`` (strong on
@@ -577,65 +495,17 @@ def lookup_values(encoded: DataFrame, column: str, values: list[int],
     r5: ``column`` may also be a STRING column — probes are then
     strings, zone pruning uses the truncate(16) ``smin``/``smax``
     lanes, and membership uses the same per-column bloom (built over
-    the chunk's distinct strings with the key-bloom hash family) —
-    or a BINARY column: probes are ``bytes``, pruning is bloom-only
+    the chunk's distinct strings with the key-bloom hash family) plus
+    ``key_bloom`` when the column is the chunk's key zone-map column
+    — or a BINARY column: probes are ``bytes``, pruning is bloom-only
     (content-digest point lookups; binary has no zone map).
 
     The column analog of the reference's skip-without-decode
     (``src/io/lib_bra_io_file_ctx.c:596-602``)."""
-    from pyspark.sql import functions as F
-
-    from .encode import TOKEN_SPECS as _TS
-    from .encode import _int_kind
-
-    kinds = dict(specs or _TS)
-    kind = kinds.get(column)
-    if kind is None:
-        raise ValueError(f"lookup_values: {column!r} not in encode "
-                         "specs")
     if not values:
         raise ValueError("lookup_values: empty probe list")
-    if kind == "binary":
-        # content-digest point lookup: bloom-only pruning (binary has
-        # no zone map), exact isin residual on the decoded bytes
-        bvals = sorted({bytes(v) for v in values})
-        pruned = encoded
-        if _has_column_blooms(encoded) and len(bvals) <= 64:
-            pruned = pruned.where(_str_bloom_keep(column, bvals))
-        dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                           global_dict=global_dict)
-        return dec.where(F.col(column).isin(bvals))
-    if kind == "string":
-        svals = sorted({str(v) for v in values})
-        pruned = encoded
-        if _has_string_stats(encoded):
-            pruned = pruned.where(
-                ~_sstats_disjoint(column, svals[0], svals[-1]))
-        # when this column is the chunk's key zone-map column, its
-        # membership filter lives in key_bloom (no column bloom is
-        # stored — encode skips the duplicate); _bloom_prune keeps
-        # every chunk whose key_col differs, so both probes compose
-        pruned = _bloom_prune(pruned, column, svals)
-        if _has_column_blooms(encoded) and len(svals) <= 64:
-            pruned = pruned.where(_str_bloom_keep(column, svals))
-        dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                           global_dict=global_dict)
-        return dec.where(F.col(column).isin(svals))
-    if not _int_kind(kind) or kind == "int_list":
-        raise ValueError(f"lookup_values: {column!r} is {kind!r} — "
-                         "point lookups need a scalar int-backed, "
-                         "string, or binary column (use lookup_docs "
-                         "for the key)")
-    ivals = sorted({int(v) for v in values})
-    pruned = encoded
-    if _has_numeric_stats(encoded):
-        pruned = pruned.where(
-            ~_stats_disjoint(column, ivals[0], ivals[-1]))
-    if _has_column_blooms(encoded) and len(ivals) <= 64:
-        pruned = pruned.where(_int_bloom_keep(column, ivals))
-    dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                       global_dict=global_dict)
-    return dec.where(_int_view(column, kind).isin(ivals))
+    return scan_where(encoded, [], specs=specs, with_n_tok=with_n_tok,
+                      global_dict=global_dict, isin={column: values})
 
 
 def _int_view(column: str, kind: str):
@@ -643,8 +513,6 @@ def _int_view(column: str, kind: str):
     (the unit ``column_stats`` bounds are recorded in): days for date,
     epoch micros for timestamp, unscaled int for decimal(p,s). All
     JVM-side expressions — the residual filter stays in codegen."""
-    from pyspark.sql import functions as F
-
     if kind == "int":
         return F.col(column).cast("long")
     if kind == "bool":
@@ -668,6 +536,15 @@ def _int_view(column: str, kind: str):
         "(supported: int, date, timestamp, decimal(p,s))")
 
 
+def _single_band(specs, column: str, lo, hi) -> list:
+    """The one band of :func:`scan_range` / :func:`scan_range_files`:
+    string columns take any bound through ``str()`` (the multi-band
+    forms insist on string bounds)."""
+    if dict(specs or TOKEN_SPECS).get(column) == "string":
+        lo, hi = str(lo), str(hi)
+    return [(column, lo, hi)]
+
+
 def scan_range(encoded: DataFrame, column: str, lo: int, hi: int,
                specs: list[tuple[str, str]] | None = None,
                with_n_tok: bool = True,
@@ -687,9 +564,11 @@ def scan_range(encoded: DataFrame, column: str, lo: int, hi: int,
     (``repartitionByRange().sortWithinPartitions()`` before a
     ``mode="direct"`` encode) for near-disjoint chunk bounds.
 
-    ``lo``/``hi`` are integers in the column's codec-lane unit (see
-    :func:`_int_view`); the residual filter re-checks exactly, so a
-    conservative zone map can only cost time, never rows.
+    ``lo``/``hi`` are in the column's codec-lane unit (see
+    :func:`_int_view`); fractional bounds on an int lane snap inward
+    (ceil ``lo``, floor ``hi``). The residual filter re-checks
+    exactly, so a conservative zone map can only cost time, never
+    rows.
 
     ``project`` limits the decode to the named columns (each manifest
     entry is independently coded, so unprojected payloads are never
@@ -697,19 +576,7 @@ def scan_range(encoded: DataFrame, column: str, lo: int, hi: int,
     probed ``column`` is always decoded for the residual filter and
     dropped from the output unless projected.
     """
-    from .encode import TOKEN_SPECS
-
-    specs = specs or TOKEN_SPECS
-    kind = dict(specs).get(column)
-    if kind is None:
-        raise ValueError(f"scan_range: {column!r} not in encode specs")
-    if kind == "float":
-        band = (column, float(lo), float(hi))
-    elif kind == "string":
-        band = (column, str(lo), str(hi))
-    else:
-        band = (column, int(lo), int(hi))
-    return scan_where(encoded, [band],
+    return scan_where(encoded, _single_band(specs, column, lo, hi),
                       specs=specs, with_n_tok=with_n_tok,
                       global_dict=global_dict, project=project)
 
@@ -718,8 +585,6 @@ def _normalize_isin(kinds: dict, isin: dict) -> dict:
     """Validate + canonicalize IN-list probes per lane (sorted,
     deduped, lane-typed): strings stay strings, binary becomes
     ``bytes``, int-backed scalars coerce to the codec-lane int."""
-    from .encode import _int_kind
-
     ivals: dict[str, list] = {}
     for c, vals in isin.items():
         kind = kinds.get(c)
@@ -731,13 +596,53 @@ def _normalize_isin(kinds: dict, isin: dict) -> dict:
             ivals[c] = sorted({str(v) for v in vals})
         elif kind == "binary":
             ivals[c] = sorted({bytes(v) for v in vals})
-        elif _int_kind(kind) and kind != "int_list":
+        elif band_class(kind) == "int":
             ivals[c] = sorted({int(v) for v in vals})
         else:
             raise ValueError(
                 f"scan_where: IN-list on {c!r} (kind {kind!r}) — "
                 "needs a scalar int-backed, string, or binary column")
     return ivals
+
+
+def _check_predicates(fn: str, specs, bands, null_cols, not_null_cols,
+                      isin):
+    """Validate a conjunctive predicate before any prune pass runs —
+    every column in the encode specs, every band on a kind with a
+    range-band lane, bounds coerced to that lane's unit (int lanes
+    snap inward; NaN refused). Returns ``(kinds, bands, null_cols,
+    not_null_cols, ivals)`` in canonical form."""
+    bands = list(bands or [])
+    null_cols = list(null_cols or [])
+    not_null_cols = list(not_null_cols or [])
+    isin = dict(isin or {})
+    if not bands and not null_cols and not not_null_cols and not isin:
+        raise ValueError(f"{fn}: at least one predicate required")
+    both = set(null_cols) & set(not_null_cols)
+    if both:
+        raise ValueError(
+            f"{fn}: columns {sorted(both)} listed as both IS NULL and "
+            "IS NOT NULL — the conjunction is empty")
+    kinds = dict(specs)
+    for c in null_cols + not_null_cols + [b[0] for b in bands]:
+        if c not in kinds:
+            raise ValueError(f"{fn}: {c!r} not in encode specs")
+    ivals = _normalize_isin(kinds, isin)
+    coerced = []
+    for column, lo, hi in bands:
+        kind = kinds[column]
+        cls = band_class(kind)
+        if cls is None:
+            hint = (" (list kinds have no scalar row value to filter)"
+                    if kind.endswith("_list") else "")
+            raise ValueError(
+                f"{fn}: column {column!r} (kind {kind!r}) carries no "
+                f"scalar numeric zone map{hint}")
+        try:
+            coerced.append((column, *coerce_band(cls, lo, hi)))
+        except ValueError as e:
+            raise ValueError(f"{fn}: {column!r}: {e}") from None
+    return kinds, coerced, null_cols, not_null_cols, ivals
 
 
 def _scan_drop(encoded: DataFrame, kinds: dict,
@@ -747,66 +652,30 @@ def _scan_drop(encoded: DataFrame, kinds: dict,
     and :func:`scan_where_files` (file-level metadata pass). Missing
     stats lanes (older manifests) contribute no proof and the chunk
     is kept; ``None`` when nothing can prove anything."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    has_int = _has_numeric_stats(encoded)
-    has_f = _has_float_stats(encoded)
-    has_s = _has_string_stats(encoded)
-    has_b = _has_column_blooms(encoded)
-    has_n = _has_null_stats(encoded)
-    drop = None
-    if has_n:
-        for c in null_cols:
-            d = _null_disjoint(c)
-            drop = d if drop is None else (drop | d)
-        for c in not_null_cols:
-            if kinds[c].endswith("_list"):
-                continue        # list null_count can't prove all-null
-            d = _notnull_disjoint(c)
-            drop = d if drop is None else (drop | d)
+    terms = []
+    if _has_lane(encoded, "null_count"):
+        terms += [_null_disjoint(c) for c in null_cols]
+        # list null_count can't prove all-null
+        terms += [_notnull_disjoint(c) for c in not_null_cols
+                  if not kinds[c].endswith("_list")]
+    has_bloom = _has_lane(encoded, "bloom")
     for column, lo, hi in bands:
-        if kinds[column] == "float":
-            if not has_f:
-                continue            # pre-r4 manifest: no float pruning
-            d = _fstats_disjoint(column, float(lo), float(hi))
-        elif kinds[column] == "string":
-            if not has_s:
-                continue            # pre-r5 manifest: no string pruning
-            d = _sstats_disjoint(column, str(lo), str(hi))
-            if has_b and lo == hi:
-                # point predicate: membership beats min/max on hash
-                # layouts; null bloom keeps (negation is null-safe)
-                d = d | ~_str_bloom_keep(column, [str(lo)])
-        else:
-            if not has_int:
-                continue
-            d = _stats_disjoint(column, lo, hi)
-            if has_b and lo == hi:
-                d = d | ~_int_bloom_keep(column, [int(lo)])
-        drop = d if drop is None else (drop | d)
+        cls = band_class(kinds[column])
+        if _has_lane(encoded, BAND_LANES[cls].lo):
+            terms.append(_band_disjoint(cls, column, lo, hi))
+        if has_bloom and lo == hi and cls != "float":
+            # point predicate: membership beats min/max on hash
+            # layouts; null bloom keeps (negation is null-safe)
+            terms.append(~_bloom_keep_for(kinds[column])(column, [lo]))
     for column, vals in ivals.items():
-        # IN-list: zone-map envelope [min, max] (lookup_values' probe
-        # band) OR bloom proof that EVERY probe value is absent
-        kind = kinds[column]
-        d = None
-        if kind == "string":
-            if has_s:
-                d = _sstats_disjoint(column, vals[0], vals[-1])
-            if has_b and len(vals) <= 64:
-                b = ~_str_bloom_keep(column, vals)
-                d = b if d is None else (d | b)
-        elif kind == "binary":
-            if has_b and len(vals) <= 64:
-                d = ~_str_bloom_keep(column, vals)
-        else:
-            if has_int:
-                d = _stats_disjoint(column, vals[0], vals[-1])
-            if has_b and len(vals) <= 64:
-                b = ~_int_bloom_keep(column, vals)
-                d = b if d is None else (d | b)
-        if d is not None:
-            drop = d if drop is None else (drop | d)
-    return drop
+        # IN-list: zone-map envelope [min, max] OR bloom proof that
+        # EVERY probe value is absent (binary: bloom only)
+        cls = band_class(kinds[column])
+        if cls is not None and _has_lane(encoded, BAND_LANES[cls].lo):
+            terms.append(_band_disjoint(cls, column, vals[0], vals[-1]))
+        if has_bloom and len(vals) <= 64:
+            terms.append(~_bloom_keep_for(kinds[column])(column, vals))
+    return reduce(or_, terms) if terms else None
 
 
 def scan_where(encoded: DataFrame,
@@ -857,53 +726,12 @@ def scan_where(encoded: DataFrame,
     lists longer than 64 skip the bloom arm (plan-size cap) and fall
     back to envelope + the exact residual.
     """
-    import math
-
-    from pyspark.sql import functions as F
-
-    from .encode import TOKEN_SPECS, _float_kind, _int_kind
-
-    null_cols = list(null_cols or [])
-    not_null_cols = list(not_null_cols or [])
-    isin = dict(isin or {})
-    if not bands and not null_cols and not not_null_cols and not isin:
-        raise ValueError("scan_where: at least one predicate required")
-    both = set(null_cols) & set(not_null_cols)
-    if both:
-        raise ValueError(
-            f"scan_where: columns {sorted(both)} listed as both "
-            "IS NULL and IS NOT NULL — the conjunction is empty")
     specs = specs or TOKEN_SPECS
-    kinds = dict(specs)
-    for c in null_cols + not_null_cols:
-        if c not in kinds:
-            raise ValueError(f"scan_where: {c!r} not in encode specs")
-    ivals = _normalize_isin(kinds, isin)
-    for column, lo, hi in bands:
-        kind = kinds.get(column)
-        if kind is None:
-            raise ValueError(
-                f"scan_where: {column!r} not in encode specs")
-        if kind == "float":
-            if math.isnan(float(lo)) or math.isnan(float(hi)):
-                raise ValueError(
-                    f"scan_where: NaN bound on {column!r} — float "
-                    "range predicates exclude NaN by definition")
-        elif kind == "string":
-            if not isinstance(lo, str) or not isinstance(hi, str):
-                raise ValueError(
-                    f"scan_where: string column {column!r} takes "
-                    "string bounds")
-        elif not _int_kind(kind) or kind == "int_list":
-            hint = (" (list kinds have no scalar row value to filter)"
-                    if kind in ("int_list",) or _float_kind(kind)
-                    else "")
-            raise ValueError(
-                f"scan_where: column {column!r} (kind {kind!r}) "
-                f"carries no scalar numeric zone map{hint}")
+    kinds, bands, null_cols, not_null_cols, ivals = _check_predicates(
+        "scan_where", specs, bands, null_cols, not_null_cols, isin)
     dec_specs = specs
     if project is not None:
-        missing = set(project) - {n for n, _ in specs}
+        missing = set(project) - set(kinds)
         if missing:
             raise ValueError(
                 f"scan_where: projected columns {sorted(missing)} not "
@@ -914,42 +742,32 @@ def scan_where(encoded: DataFrame,
     drop = _scan_drop(encoded, kinds, bands, null_cols,
                       not_null_cols, ivals)
     pruned = encoded.where(~drop) if drop is not None else encoded
+    # a string point band or IN-list on the chunk's KEY column probes
+    # key_bloom (no column bloom is stored for it); _bloom_prune keeps
+    # every chunk whose key_col differs, so this composes
     for column, lo, hi in bands:
-        # a string point band on the chunk's KEY column probes
-        # key_bloom (no column bloom is stored for it); _bloom_prune
-        # keeps every chunk whose key_col differs, so this composes
         if kinds[column] == "string" and lo == hi:
-            pruned = _bloom_prune(pruned, column, [str(lo)])
+            pruned = _bloom_prune(pruned, column, [lo])
     for column, vals in ivals.items():
         if kinds[column] == "string":
             pruned = _bloom_prune(pruned, column, vals)
     dec = decode_table(pruned, specs=dec_specs, with_n_tok=with_n_tok,
                        global_dict=global_dict)
-    cond = None
-    for column, lo, hi in bands:
-        if kinds[column] == "float":
-            c = F.col(column).between(float(lo), float(hi))
-        elif kinds[column] == "string":
-            c = F.col(column).between(str(lo), str(hi))
-        else:
-            c = _int_view(column, kinds[column]).between(int(lo),
-                                                         int(hi))
-        cond = c if cond is None else (cond & c)
-    for col in null_cols:
-        c = F.col(col).isNull()
-        cond = c if cond is None else (cond & c)
-    for col in not_null_cols:
-        c = F.col(col).isNotNull()
-        cond = c if cond is None else (cond & c)
-    for col, vals in ivals.items():
+
+    def lane(col):
+        # residual in the lane unit the bounds were coerced to
         kind = kinds[col]
-        c = (F.col(col).isin(vals) if kind in ("string", "binary")
-             else _int_view(col, kind).isin(vals))
-        cond = c if cond is None else (cond & c)
-    out = dec.where(cond)
+        return _int_view(col, kind) if band_class(kind) == "int" \
+            else F.col(col)
+
+    out = dec.where(reduce(and_, (
+        [lane(c).between(lo, hi) for c, lo, hi in bands]
+        + [F.col(c).isNull() for c in null_cols]
+        + [F.col(c).isNotNull() for c in not_null_cols]
+        + [lane(c).isin(vals) for c, vals in ivals.items()])))
     if project is not None:
-        out = out.select(*[n for n, _ in dec_specs if n in project]
-                         + (["n_tok"] if with_n_tok else []))
+        out = out.select(*[n for n, _ in dec_specs if n in project],
+                         *[c for c in ("n_tok",) if c in dec.columns])
     return out
 
 
@@ -959,7 +777,8 @@ def scan_range_files(spark, manifest_path: str, column: str,
                      with_n_tok: bool = True,
                      global_dict=None) -> DataFrame:
     """File-skipping form of :func:`scan_range` for a parquet-backed
-    manifest — the Iceberg-style two-phase scan:
+    manifest — the Iceberg-style two-phase scan of
+    :func:`scan_where_files` for one band:
 
     1. a metadata pass reads ONLY ``column_stats`` + the file name
        (parquet column pruning: the payload column ``columns`` is
@@ -977,41 +796,10 @@ def scan_range_files(spark, manifest_path: str, column: str,
     the driver; it is bounded by the shard count, the same scale as
     Spark's own file index.
     """
-    from pyspark.sql import functions as F
-
-    from .encode import TOKEN_SPECS as _TS
-
-    man = spark.read.parquet(manifest_path)
-    kind = dict(specs or _TS).get(column)
-    is_float, is_str = kind == "float", kind == "string"
-    if (is_float and not _has_float_stats(man)) \
-            or (is_str and not _has_string_stats(man)) \
-            or (not is_float and not is_str
-                and not _has_numeric_stats(man)):
-        # pre-stats manifest: no file skipping possible; fall through
-        # to the (prune-free) chunk scan rather than miss rows
-        return scan_range(man, column, lo, hi, specs=specs,
-                          with_n_tok=with_n_tok,
-                          global_dict=global_dict)
-    if is_float:
-        disjoint = _fstats_disjoint(column, float(lo), float(hi))
-    elif is_str:
-        disjoint = _sstats_disjoint(column, str(lo), str(hi))
-    else:
-        disjoint = _stats_disjoint(column, lo, hi)
-    phase1 = (man.withColumn("_f", F.input_file_name())
-              .where(~disjoint)
-              .select("_f").distinct())
-    keep = [r[0] for r in phase1.collect()]
-    if not keep:
-        from .encode import TOKEN_SPECS
-
-        dec_schema = _decoded_spark_schema(specs or TOKEN_SPECS,
-                                           with_n_tok)
-        return spark.createDataFrame([], dec_schema)
-    enc = spark.read.parquet(*keep)
-    return scan_range(enc, column, lo, hi, specs=specs,
-                      with_n_tok=with_n_tok, global_dict=global_dict)
+    return scan_where_files(spark, manifest_path,
+                            _single_band(specs, column, lo, hi),
+                            specs=specs, with_n_tok=with_n_tok,
+                            global_dict=global_dict)
 
 
 def scan_where_files(spark, manifest_path: str,
@@ -1023,31 +811,25 @@ def scan_where_files(spark, manifest_path: str,
                      null_cols: list[str] | None = None,
                      not_null_cols: list[str] | None = None,
                      isin: dict[str, list] | None = None) -> DataFrame:
-    """File-skipping form of :func:`scan_where` — the two-phase
-    metadata-pass pattern of :func:`scan_range_files` generalized to
-    the full predicate family (range + equality + IN-list + null
-    bands, conjunctive). Phase 1 evaluates the SAME prune disjunction
-    (``_scan_drop``) over only ``column_stats`` + file names (the
-    payload column is never fetched) and collects the shard files
-    holding at least one possibly-matching chunk; phase 2 re-runs
-    :func:`scan_where` over just those files, so chunk-level pruning,
-    key-bloom composition, and the exact residual all re-apply. A
-    manifest predating every probed stats lane falls through to the
-    prune-free scan rather than miss rows."""
-    from pyspark.sql import functions as F
-
-    from .encode import TOKEN_SPECS as _TS
-
+    """File-skipping form of :func:`scan_where` — the Iceberg-style
+    two-phase scan over the full predicate family (range + equality +
+    IN-list + null bands, conjunctive). Phase 1 evaluates the SAME
+    prune disjunction (``_scan_drop``) over only ``column_stats`` +
+    file names (the payload column is never fetched) and collects the
+    shard files holding at least one possibly-matching chunk; phase 2
+    re-runs :func:`scan_where` over just those files, so chunk-level
+    pruning, key-bloom composition, and the exact residual all
+    re-apply. A manifest predating every probed stats lane falls
+    through to the prune-free scan rather than miss rows."""
     man = spark.read.parquet(manifest_path)
-    specs = specs or _TS
-    kinds = dict(specs)
+    specs = specs or TOKEN_SPECS
+    kinds, bands, null_cols, not_null_cols, ivals = _check_predicates(
+        "scan_where_files", specs, bands, null_cols, not_null_cols, isin)
     kw = dict(specs=specs, with_n_tok=with_n_tok,
               global_dict=global_dict, project=project,
               null_cols=null_cols, not_null_cols=not_null_cols,
               isin=isin)
-    drop = _scan_drop(man, kinds, bands or [],
-                      list(null_cols or []), list(not_null_cols or []),
-                      _normalize_isin(kinds, dict(isin or {})))
+    drop = _scan_drop(man, kinds, bands, null_cols, not_null_cols, ivals)
     if drop is None:
         # nothing provable at this manifest's stats vintage
         return scan_where(man, bands, **kw)
@@ -1055,10 +837,9 @@ def scan_where_files(spark, manifest_path: str,
               .where(~drop).select("_f").distinct())
     keep = [r[0] for r in phase1.collect()]
     if not keep:
-        need = ([n for n, _ in specs if n in project]
-                if project is not None else [n for n, _ in specs])
         dec_schema = _decoded_spark_schema(
-            [s for s in specs if s[0] in need], with_n_tok)
+            [s for s in specs if project is None or s[0] in project],
+            with_n_tok)
         return spark.createDataFrame([], dec_schema)
     return scan_where(spark.read.parquet(*keep), bands, **kw)
 
@@ -1087,63 +868,47 @@ def agg_encoded(encoded: DataFrame, column: str) -> DataFrame:
     the reference answering ``unbra -l`` from headers alone
     (``src/io/lib_bra_io_file_ctx.c:701-804``).
     """
-    from pyspark.sql import functions as F
-
-    if not _has_numeric_stats(encoded):
+    if not _has_lane(encoded, "vmin"):
         raise ValueError(
             "agg_encoded: manifest predates numeric column_stats "
             "(no vmin/vmax lanes) — decode_table + agg instead, or "
             "re-encode")
     _check_stats_column(encoded, column, "agg_encoded")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    has_f = _has_float_stats(encoded)
-    has_s = _has_string_stats(encoded)
-    per = encoded.select(
-        s["vmin"].alias("c_vmin"), s["vmax"].alias("c_vmax"),
-        s["vsum"].alias("c_vsum"), s["n_vals"].alias("c_n"),
-        s["null_count"].alias("c_nulls"),
-        (s["fmin"] if has_f
-         else F.lit(None).cast("double")).alias("c_fmin"),
-        (s["fmax"] if has_f
-         else F.lit(None).cast("double")).alias("c_fmax"),
-        (s["smin"] if has_s
-         else F.lit(None).cast("string")).alias("c_smin"),
-        (s["smax"] if has_s
-         else F.lit(None).cast("string")).alias("c_smax"))
+    per = encoded.select(*_lanes_of(
+        encoded, column, ("vmin", "vmax", "vsum", "n_vals", "null_count",
+                          "fmin", "fmax", "smin", "smax")))
     # a chunk whose stats are unusable (missing entry, or values
     # present but no exact sum) poisons only the lanes it cannot serve
-    bad_sum = F.max(F.when(F.col("c_vsum").isNull()
-                           & (F.coalesce("c_n", F.lit(-1)) != 0), 1)
+    bad_sum = F.max(F.when(F.col("vsum").isNull()
+                           & (F.coalesce("n_vals", F.lit(-1)) != 0), 1)
                     .otherwise(0))
-    bad_cnt = F.max(F.when(F.col("c_n").isNull(), 1).otherwise(0))
+    bad_cnt = F.max(F.when(F.col("n_vals").isNull(), 1).otherwise(0))
     return per.agg(
         F.when(bad_cnt == 1, None)
-        .otherwise(F.coalesce(F.sum("c_n"), F.lit(0)))
+        .otherwise(F.coalesce(F.sum("n_vals"), F.lit(0)))
         .alias("n_values"),
         F.when(bad_cnt == 1, None)
-        .otherwise(F.coalesce(F.sum("c_nulls"), F.lit(0)))
+        .otherwise(F.coalesce(F.sum("null_count"), F.lit(0)))
         .alias("n_nulls"),
-        F.min("c_vmin").alias("vmin"),
-        F.max("c_vmax").alias("vmax"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
         F.when(bad_sum == 1, None)
-        .otherwise(F.sum(F.col("c_vsum").cast("decimal(38,0)")))
+        .otherwise(F.sum(F.col("vsum").cast("decimal(38,0)")))
         .alias("vsum"),
         # float lanes (r4): typed double bounds for float kinds,
         # null elsewhere — NaN-free by construction (encode excludes
         # NaN from fmin/fmax), so min/max over chunks stay exact
-        F.min("c_fmin").alias("fmin"),
-        F.max("c_fmax").alias("fmax"),
+        F.min("fmin").alias("fmin"),
+        F.max("fmax").alias("fmax"),
         # string lanes (r5): truncate(16) BOUNDS, not exact extremes —
         # smin <= true min and smax >= true max (containment, not
         # equality). smax comes back null ("unbounded above") if any
         # chunk with values recorded no upper bound.
-        F.min("c_smin").alias("smin"),
-        F.when(F.max(F.when(F.col("c_smax").isNull()
-                            & F.col("c_smin").isNotNull(), 1)
+        F.min("smin").alias("smin"),
+        F.when(F.max(F.when(F.col("smax").isNull()
+                            & F.col("smin").isNotNull(), 1)
                      .otherwise(0)) == 1, None)
-        .otherwise(F.max("c_smax")).alias("smax"))
+        .otherwise(F.max("smax")).alias("smax"))
 
 
 def _check_stats_column(encoded: DataFrame, column: str,
@@ -1157,15 +922,6 @@ def _check_stats_column(encoded: DataFrame, column: str,
         raise ValueError(
             f"{fn}: {column!r} not in the manifest's columns "
             f"{sorted(names)}")
-
-
-def _has_hll(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 ``hll`` sketch lane —
-    older manifests degrade to "no estimate", never a guess."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "hll" in elem.fieldNames()
 
 
 def ndv_encoded(encoded: DataFrame, column: str) -> int:
@@ -1187,20 +943,14 @@ def ndv_encoded(encoded: DataFrame, column: str) -> int:
     a ``bloom=False`` encode): an estimate that silently ignored
     chunks would be a wrong answer, the same no-silent-miss rule as
     every pruning lane."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
     from .bloom import HLL_M, hll_estimate
 
-    if not _has_hll(encoded):
+    if not _has_lane(encoded, "hll"):
         raise ValueError(
             "ndv_encoded: manifest predates hll sketches (pre-r5) — "
             "decode_table + countDistinct instead, or re-encode")
     _check_stats_column(encoded, column, "ndv_encoded")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    per = encoded.select(s["hll"].alias("hll"))
+    per = encoded.select(*_lanes_of(encoded, column, ["hll"]))
     if per.where(F.col("hll").isNull()).limit(1).count():
         raise ValueError(
             f"ndv_encoded: column {column!r} has chunks without a "
@@ -1212,15 +962,6 @@ def ndv_encoded(encoded: DataFrame, column: str) -> int:
     for row in merged:
         regs[row["pos"]] = row["r"]
     return int(round(hll_estimate(regs)))
-
-
-def _has_topk(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 ``topk`` value-counts
-    lane — older manifests degrade to "no summary", never a guess."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "topk" in elem.fieldNames()
 
 
 def topk_encoded(encoded: DataFrame, column: str,
@@ -1248,17 +989,12 @@ def topk_encoded(encoded: DataFrame, column: str,
     column lacks a summary (non-summarizable kind — float, binary,
     int_list — or ``bloom=False``): a distribution that silently
     ignored chunks would be a wrong answer."""
-    from pyspark.sql import functions as F
-
-    if not _has_topk(encoded):
+    if not _has_lane(encoded, "topk"):
         raise ValueError(
             "topk_encoded: manifest predates topk value-counts "
             "(pre-r5) — decode_table + groupBy count instead")
     _check_stats_column(encoded, column, "topk_encoded")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    per = encoded.select(s["topk"].alias("topk"))
+    per = encoded.select(*_lanes_of(encoded, column, ["topk"]))
     if per.where(F.col("topk").isNull()).limit(1).count():
         raise ValueError(
             f"topk_encoded: column {column!r} has chunks without a "
@@ -1373,23 +1109,6 @@ def _qcut_bounds(cuts: list, n: int, lo, hi) -> tuple[int, int]:
             max(0, f_hi_max - g_lo_min))
 
 
-def _has_qcut(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 quantile-cut lanes."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "qcut" in elem.fieldNames()
-
-
-def _has_hist(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 ``hist`` selectivity
-    lane — older manifests degrade to "no histogram", never a guess."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "hist" in elem.fieldNames()
-
-
 def hist_encoded(encoded: DataFrame, column: str,
                  lo, hi) -> tuple[int, int]:
     """RIGOROUS bounds on ``COUNT(*) WHERE lo <= column <= hi``
@@ -1416,7 +1135,8 @@ def hist_encoded(encoded: DataFrame, column: str,
     brackets are rigorous so their intersection is too.
     ``lo``/``hi`` are lane units — days for date, epoch micros
     for timestamp, unscaled ints for decimal — the same convention as
-    :func:`scan_range`.
+    :func:`scan_range` (fractional bounds on an int lane snap
+    inward).
 
     The per-chunk pass runs as a ``mapInArrow`` over ONLY the stats
     projection (metadata-sized rows: 16 counts + 4 bounds per chunk,
@@ -1428,36 +1148,22 @@ def hist_encoded(encoded: DataFrame, column: str,
     binary, list lanes —, ``bloom=False`` encode, or a float chunk
     with ±Inf bounds): bounds that silently ignored chunks would be a
     wrong answer, the same no-silent-miss rule as every other lane."""
-    from pyspark.sql import functions as F
-
-    from .encode import _int_kind
-
-    if not _has_hist(encoded):
+    if not _has_lane(encoded, "hist"):
         raise ValueError(
             "hist_encoded: manifest predates hist lane (pre-r5) — "
             "decode_table + filter/count instead, or re-encode")
     _check_stats_column(encoded, column, "hist_encoded")
-    kinds = dict(manifest_specs(encoded))
-    kind = kinds[column]
-    if kind == "float":
-        is_float = True
-    elif _int_kind(kind) and kind != "int_list":
-        is_float = False
-    else:
+    kind = dict(manifest_specs(encoded))[column]
+    cls = band_class(kind)
+    if cls not in ("int", "float"):
         raise ValueError(
             f"hist_encoded: column {column!r} has kind {kind!r} — "
             "histograms cover scalar int-backed and float lanes only")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    per = encoded.select(
-        s["hist"].alias("hist"), s["n_vals"].alias("n_vals"),
-        s["vmin"].alias("vmin"), s["vmax"].alias("vmax"),
-        s["fmin"].alias("fmin"), s["fmax"].alias("fmax"),
-        (s["qcut"] if _has_qcut(encoded)
-         else F.lit(None).cast("array<bigint>")).alias("qcut"),
-        (s["fqcut"] if _has_qcut(encoded)
-         else F.lit(None).cast("array<double>")).alias("fqcut"))
+    is_float = cls == "float"
+    lo, hi = coerce_band(cls, lo, hi)
+    per = encoded.select(*_lanes_of(
+        encoded, column, ("hist", "n_vals", "vmin", "vmax", "fmin",
+                          "fmax", "qcut", "fqcut")))
     if per.where(F.col("hist").isNull()
                  & (F.coalesce(F.col("n_vals"), F.lit(1)) > 0)
                  ).limit(1).count():
@@ -1465,8 +1171,8 @@ def hist_encoded(encoded: DataFrame, column: str,
             f"hist_encoded: column {column!r} has chunks without a "
             "histogram (bloom=False encode or non-finite float "
             "bounds) — decode_table + filter/count instead")
-    flo, fhi = (float(lo), float(hi)) if is_float else (0.0, 0.0)
-    ilo, ihi = (0, 0) if is_float else (int(lo), int(hi))
+    flo, fhi = (lo, hi) if is_float else (0.0, 0.0)
+    ilo, ihi = (0, 0) if is_float else (lo, hi)
 
     def bounds(batches):
         # per-CHUNK metadata rows (16 counts + bounds each) — the
@@ -1551,20 +1257,13 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
     (the rank bound needs every chunk accounted for)."""
     import math
 
-    from pyspark.sql import functions as F
-
-    from .encode import _int_kind
-
     if not 0.0 < q <= 1.0:
         raise ValueError(f"quantile_encoded: q={q} not in (0, 1]")
     kinds = dict(manifest_specs(encoded))
     _check_stats_column(encoded, column, "quantile_encoded")
     kind = kinds[column]
-    if kind == "float":
-        is_float = True
-    elif _int_kind(kind) and kind != "int_list":
-        is_float = False
-    else:
+    is_float = band_class(kind) == "float"
+    if band_class(kind) not in ("int", "float"):
         raise ValueError(
             f"quantile_encoded: column {column!r} has kind {kind!r} "
             "— histograms cover scalar int-backed and float lanes "
@@ -1588,19 +1287,9 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
     # expression an oracle computes — rank consistency beats
     # idealized rational arithmetic here
     k = min(n, max(1, int(math.ceil(q * n))))
-    has_q = _has_qcut(encoded)
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    per = encoded.select(
-        s["hist"].alias("hist"),
-        s["vmin"].alias("vmin"), s["vmax"].alias("vmax"),
-        s["fmin"].alias("fmin"), s["fmax"].alias("fmax"),
-        (s["qcut"] if has_q
-         else F.lit(None).cast("array<bigint>")).alias("qcut"),
-        (s["fqcut"] if has_q
-         else F.lit(None).cast("array<double>")).alias("fqcut")
-    ).cache()
+    per = encoded.select(*_lanes_of(
+        encoded, column, ("hist", "vmin", "vmax", "fmin", "fmax", "qcut",
+                          "fqcut"))).cache()
     try:
         # invariant: quantile in (ex_lo, hi_val]; ex_lo None = -inf
         ex_lo, hi_val = None, vmax
@@ -1735,66 +1424,24 @@ def scan_estimate(encoded: DataFrame,
     argument conventions as :func:`scan_where` (lane units for
     int-backed kinds, double bounds for float, conjunctive
     semantics)."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from .encode import TOKEN_SPECS, _int_kind
-
-    bands = list(bands or [])
-    null_cols = list(null_cols or [])
-    not_null_cols = list(not_null_cols or [])
-    isin = dict(isin or {})
-    if not bands and not null_cols and not not_null_cols and not isin:
-        raise ValueError("scan_estimate: at least one predicate "
-                         "required")
-    specs = specs or TOKEN_SPECS
-    kinds = dict(specs)
-    for c in (null_cols + not_null_cols + list(isin)
-              + [b[0] for b in bands]):
-        if c not in kinds:
-            raise ValueError(
-                f"scan_estimate: {c!r} not in encode specs")
-    for column, lo, hi in bands:
-        if kinds[column] == "float" and (math.isnan(float(lo))
-                                         or math.isnan(float(hi))):
-            raise ValueError(
-                f"scan_estimate: NaN bound on {column!r}")
-    ivals = _normalize_isin(kinds, isin)
+    kinds, bands, null_cols, not_null_cols, ivals = _check_predicates(
+        "scan_estimate", specs or TOKEN_SPECS, bands, null_cols,
+        not_null_cols, isin)
     drop = _scan_drop(encoded, kinds, bands, null_cols,
                       not_null_cols, ivals)
     kept = F.lit(True) if drop is None else ~drop
     # histogrammable band columns: scalar int-backed or float
-    hcols = [(c, lo, hi, kinds[c] == "float") for c, lo, hi in bands
-             if kinds[c] == "float"
-             or (_int_kind(kinds[c]) and kinds[c] != "int_list")]
+    hcols = [(c, lo, hi, band_class(kinds[c]) == "float")
+             for c, lo, hi in bands if band_class(kinds[c]) != "string"]
     lower_valid = (len(hcols) == len(bands) and not ivals
                    and not null_cols and not not_null_cols)
     cols = [F.col("n_rows"), kept.alias("kept")]
-
-    def _stats_of(name):
-        # NB: F.filter treats a 2-arg lambda as (element, index), so
-        # bind the column name via a closure, never a default arg
-        return F.element_at(
-            F.filter("column_stats",
-                     lambda e: e["name"] == F.lit(name)), 1)
-
-    has_q = _has_qcut(encoded)
     for i, (c, _lo, _hi, _f) in enumerate(hcols):
-        s = _stats_of(c)
-        cols += [s["hist"].alias(f"h{i}"),
-                 s["vmin"].alias(f"vlo{i}"), s["vmax"].alias(f"vhi{i}"),
-                 s["fmin"].alias(f"flo{i}"), s["fmax"].alias(f"fhi{i}"),
-                 s["n_vals"].alias(f"nv{i}"),
-                 (s["qcut"] if has_q
-                  else F.lit(None).cast("array<bigint>"))
-                 .alias(f"qc{i}"),
-                 (s["fqcut"] if has_q
-                  else F.lit(None).cast("array<double>"))
-                 .alias(f"fqc{i}")]
-    per = encoded.select(*cols) if _has_hist(encoded) or not hcols \
-        else encoded.select(F.col("n_rows"), kept.alias("kept"))
-    pre_r5 = hcols and not _has_hist(encoded)
+        cols += _lanes_of(encoded, c, ("hist", "vmin", "vmax", "fmin",
+                                       "fmax", "n_vals", "qcut", "fqcut"),
+                          suffix=f"_{i}")
+    per = encoded.select(*cols)
+    pre_r5 = hcols and not _has_lane(encoded, "hist")
 
     def probe(batches):
         # per-CHUNK metadata rows; Python-int arithmetic keeps the
@@ -1818,36 +1465,32 @@ def scan_estimate(encoded: DataFrame,
                 c_upper = n
                 c_lo_total = 0
                 for i, (_c, blo, bhi, isf) in enumerate(hcols):
-                    h = t[f"h{i}"][j]
+                    h = t[f"hist_{i}"][j]
                     cuts = None
                     if isf:
-                        fmin, fmax = t[f"flo{i}"][j], t[f"fhi{i}"][j]
+                        fmin, fmax = t[f"fmin_{i}"][j], t[f"fmax_{i}"][j]
                         if fmin is None:
                             cmin, cmax = 0, 0   # no finite values
                         elif not h:
-                            nv = t[f"nv{i}"][j]
+                            nv = t[f"n_vals_{i}"][j]
                             if nv:              # ±Inf bounds: no hist
                                 cmin, cmax, miss = 0, n, miss + 1
                             else:
                                 cmin, cmax = 0, 0
                         else:
                             cmin, cmax = _hist_bounds_float(
-                                h, fmin, fmax,
-                                float(blo), float(bhi))
-                            cuts = t[f"fqc{i}"][j]
-                            blo, bhi = float(blo), float(bhi)
+                                h, fmin, fmax, blo, bhi)
+                            cuts = t[f"fqcut_{i}"][j]
                     else:
-                        vmin, vmax = t[f"vlo{i}"][j], t[f"vhi{i}"][j]
+                        vmin, vmax = t[f"vmin_{i}"][j], t[f"vmax_{i}"][j]
                         if vmin is None:
                             cmin, cmax = 0, 0   # all-null chunk
                         elif not h:
                             cmin, cmax, miss = 0, n, miss + 1
                         else:
                             cmin, cmax = _hist_bounds_int(
-                                h, int(vmin), int(vmax),
-                                int(blo), int(bhi))
-                            cuts = t[f"qc{i}"][j]
-                            blo, bhi = int(blo), int(bhi)
+                                h, vmin, vmax, blo, bhi)
+                            cuts = t[f"qcut_{i}"][j]
                     if cuts:
                         # intersect with the equi-depth CDF bracket
                         ql, qh = _qcut_bounds(cuts, sum(h), blo, bhi)
@@ -1905,8 +1548,6 @@ def lookup_rows(encoded: DataFrame, doc_ids: list[str],
     requires full payloads — use ``decode_table(verify_checksums=True)``
     for audits).
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
     from .chunk import decode_column, decode_column_rows
 
     wanted = sorted(set(doc_ids))
@@ -1973,7 +1614,7 @@ def _decoded_spark_schema(specs: list[tuple[str, str]],
                        "date": "date", "timestamp": "timestamp",
                        "bool": "boolean"}[kind]
         parts.append(f"{name} {spark_t}")
-    if with_n_tok:
+    if _emits_n_tok(specs, with_n_tok):
         parts.append("n_tok int")
     return ", ".join(parts)
 
@@ -2004,8 +1645,6 @@ def decode_files(spark, manifest_path,
     With it, the returned DataFrame carries one stats row per written
     shard: ``(shard, n_rows, n_values)``.
     """
-    from .encode import TOKEN_SPECS
-
     specs = specs or TOKEN_SPECS
 
     paths = sorted(spark.read.parquet(manifest_path).inputFiles()) \
@@ -2096,13 +1735,7 @@ def decode_table(encoded: DataFrame,
     when chunks carry ``gdict.*`` codecs (load it with
     ``codecs.gdict.load_global_dict``); dict-id mismatches raise.
     """
-    from .encode import TOKEN_SPECS
-
     specs = specs or TOKEN_SPECS
-    # n_tok is the length of the (last) int_list column; a table
-    # without one has no n_tok to emit — silently derive rather than
-    # failing deep in the UDF with an opaque NoneType error
-    with_n_tok = with_n_tok and any(k == "int_list" for _, k in specs)
     out_spark_schema = _decoded_spark_schema(specs, with_n_tok)
     fn = _make_decode_fn(specs, with_n_tok, verify_checksums,
                          global_dict=global_dict)
@@ -2110,8 +1743,6 @@ def decode_table(encoded: DataFrame,
             "columns"]
     pruned = encoded.select(*cols)
     if not verify_checksums:
-        from pyspark.sql import functions as F
-
         wanted = F.array(*[F.lit(n) for n, _ in specs])
         pruned = pruned.withColumn(
             "columns",

@@ -35,13 +35,18 @@ Scale design (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+import numbers
+from collections.abc import Callable, Iterator
+from decimal import Decimal, InvalidOperation
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 from ..codecs.strcodecs import strings_from_arrow
@@ -69,6 +74,121 @@ _COLUMN_STRUCT = pa.struct([
     ("enc_bytes", pa.int64()),
 ])
 
+# The column_stats lane table: the ONE place a stats lane is declared,
+# as (field, Arrow type) in manifest order. The manifest schema (Arrow
+# and Spark), _entry_stats' all-None default row, and every consumer's
+# lane-presence check and typed-null fallback derive from it; the
+# range-band lanes of each kind class are named in BAND_LANES below.
+STATS_LANES: list[tuple[str, pa.DataType]] = [
+    # vmin/vmax/vsum/null_count: per-chunk numeric zone map + aggregate
+    # pushdown stats for every int-backed kind (int, date, timestamp,
+    # decimal -> unscaled, int_list -> element bounds). Null vmin/vmax
+    # means "no numeric stats for this column" (string/binary/float
+    # kinds, or an all-null chunk) — consumers must treat null bounds
+    # as "may match anything" and never prune on them (the same
+    # silent-miss rule as key_col). vsum is null when the exact
+    # chunk sum could exceed int64 (consumers fall back to decoding).
+    ("vmin", pa.int64()),
+    ("vmax", pa.int64()),
+    ("vsum", pa.int64()),
+    ("n_vals", pa.int64()),
+    ("null_count", pa.int64()),
+    # fmin/fmax: float zone map (r4) — typed double bounds over the
+    # non-null, non-NaN values of float/float_list/double_list kinds
+    # (NaN is excluded: Spark range predicates with finite bounds
+    # never match NaN, so bounds over comparable values stay exact).
+    # Null on int-backed/string kinds and all-null/all-NaN chunks —
+    # same never-prune-on-null rule as vmin/vmax.
+    ("fmin", pa.float64()),
+    ("fmax", pa.float64()),
+    # smin/smax: string zone map (r5) — Iceberg-style truncate(16)
+    # bounds over the non-null values of string kinds. smin is a
+    # 16-char prefix of the true min (a valid LOWER bound: a prefix
+    # never sorts above the string it prefixes); smax is the true max
+    # when short, else its 16-char prefix with the last incrementable
+    # codepoint bumped (a valid UPPER bound) — or null when no such
+    # codepoint exists (all at U+10FFFF), meaning "unbounded above":
+    # consumers may still prune on smin alone. Null smin on non-string
+    # kinds and all-null chunks — the usual never-prune-on-null rule.
+    ("smin", pa.string()),
+    ("smax", pa.string()),
+    # bloom: per-column membership sidecar (r5) — bloom words over
+    # the DISTINCT non-null lane values of scalar int-backed kinds
+    # (int/long/date/timestamp/decimal, in their codec-lane unit),
+    # same geometry/derivation as key_bloom (operators/bloom.py).
+    # Point lookups on int columns (e.g. o_orderkey under a hash
+    # layout, where every partition spans the full key range and
+    # min/max bounds barely prune) bit-test these words in pure
+    # Catalyst. Null = "may match" (pre-r5 manifests, non-int
+    # kinds, bloom=False encodes) — correctness never depends on
+    # the bloom.
+    ("bloom", pa.list_(pa.int64())),
+    # hll: distinct-count sketch sidecar (r5) — 1024 HyperLogLog
+    # registers over the SAME per-distinct-value hashes the bloom
+    # consumes (operators/bloom.py, Flajolet AofA'07). Mergeable
+    # by per-register max, so ndv_encoded answers "how many
+    # distinct values" from the manifest alone at any chunk count
+    # — the cardinality question every layout/join-strategy
+    # decision starts with. Same lanes as bloom (scalar
+    # int-backed, string, binary; int_list token lanes excluded —
+    # keeping the hot token-encode path cost-free; vocab NDV
+    # comes from build_global_dict). Null = "no sketch" (pre-r5
+    # manifests, bloom=False) — consumers must refuse to
+    # estimate, never guess.
+    ("hll", pa.list_(pa.int32())),
+    # topk: truncated value-counts summary (r5) — the chunk's 16
+    # most frequent lane values with exact counts (count desc,
+    # value asc tie-break; int lanes store the codec-lane int as
+    # a decimal string). EXACT whenever the chunk holds <= 16
+    # distinct values (then absent values provably count 0);
+    # truncated chunks set an undercount bound via their 16th
+    # count (topk_encoded sums it as merge slack). Completes the
+    # manifest-as-index trio: membership (bloom), cardinality
+    # (hll), distribution (topk) — "what's the language/domain
+    # mix" answered without reading a payload byte. Null = "no
+    # summary" (non-summarizable kinds: float, int_list, binary;
+    # bloom=False encodes; pre-r5 manifests); [] = empty chunk
+    # (exactly zero of everything).
+    ("topk", pa.list_(pa.struct([("v", pa.string()),
+                                 ("c", pa.int64())]))),
+    # hist: equi-width value histogram (r5) — 16 bucket counts
+    # over the chunk's non-null lane values, completing the
+    # manifest-as-index quartet: membership (bloom), cardinality
+    # (hll), distribution (topk), SELECTIVITY (hist). Int-backed
+    # scalar lanes bucket by offset // div with
+    # div = (vmax-vmin)//16 + 1 computed in the uint64 domain
+    # (wrap-safe for the full int64 range — the INT64_MIN lesson
+    # from cost.py applied on day one); the scalar float lane
+    # buckets (v-fmin)/(fmax-fmin)*16 clipped to [0,15], built
+    # only when both bounds are finite (±Inf bounds make
+    # equi-width edges meaningless — such chunks store null and
+    # consumers refuse, never guess). Bucket counts are EXACT, so
+    # hist_encoded answers range-count questions with RIGOROUS
+    # [min,max] bounds from the manifest alone: fully-contained
+    # buckets count exactly, edge buckets add to the upper bound.
+    # Null = "no histogram" (int_list/float_list/string/binary
+    # kinds, bloom=False encodes, non-finite float bounds, pre-r5
+    # manifests); [] = empty chunk.
+    ("hist", pa.list_(pa.int64())),
+    # qcut / fqcut: equi-DEPTH quantile cuts (r5) — the 15
+    # interior 1/16-quantile VALUES of the chunk's lane values
+    # (sorted[(j*n)//16], j = 1..15), typed per lane so no cut is
+    # ever rounded (an int64 cut through double would shift
+    # comparisons past 2^53 and break rigor). Where the
+    # equi-width hist is blind to skew (a heavy-tailed chunk
+    # piles everything into one bucket), the cuts give CDF
+    # brackets with n/16 resolution REGARDLESS of the value
+    # distribution: at cut j, at least (j*n)//16 + 1 values are
+    # <= it and at most (k*n)//16 values are <= anything below
+    # cut k — pure order statistics, comparisons only, no
+    # arithmetic on the values, so there is nothing to overflow
+    # or round. Consumers intersect this bracket with the hist
+    # bracket. Same gate as hist (sketch scalar lanes); null =
+    # "no cuts", [] = empty chunk.
+    ("qcut", pa.list_(pa.int64())),
+    ("fqcut", pa.list_(pa.float64())),
+]
+
 MANIFEST_SCHEMA = pa.schema([
     ("chunk_id", pa.string()),
     ("part_id", pa.int32()),
@@ -86,119 +206,14 @@ MANIFEST_SCHEMA = pa.schema([
     # (the reference's `unbra -l`) must be answerable without the scan
     # ever touching payload bytes — exploding `columns` defeats nested
     # schema pruning, so the stats live in their own top-level column
-    # vmin/vmax/vsum/null_count: per-chunk numeric zone map + aggregate
-    # pushdown stats for every int-backed kind (int, date, timestamp,
-    # decimal -> unscaled, int_list -> element bounds). Null vmin/vmax
-    # means "no numeric stats for this column" (string/binary/float
-    # kinds, or an all-null chunk) — consumers must treat null bounds
-    # as "may match anything" and never prune on them (the same
-    # silent-miss rule as key_col above). vsum is null when the exact
-    # chunk sum could exceed int64 (consumers fall back to decoding).
-    # fmin/fmax: float zone map (r4) — typed double bounds over the
-    # non-null, non-NaN values of float/float_list/double_list kinds
-    # (NaN is excluded: Spark range predicates with finite bounds
-    # never match NaN, so bounds over comparable values stay exact).
-    # Null on int-backed/string kinds and all-null/all-NaN chunks —
-    # same never-prune-on-null rule as vmin/vmax.
-    # smin/smax: string zone map (r5) — Iceberg-style truncate(16)
-    # bounds over the non-null values of string kinds. smin is a
-    # 16-char prefix of the true min (a valid LOWER bound: a prefix
-    # never sorts above the string it prefixes); smax is the true max
-    # when short, else its 16-char prefix with the last incrementable
-    # codepoint bumped (a valid UPPER bound) — or null when no such
-    # codepoint exists (all at U+10FFFF), meaning "unbounded above":
-    # consumers may still prune on smin alone. Null smin on non-string
-    # kinds and all-null chunks — the usual never-prune-on-null rule.
+    # — exactly the lanes of STATS_LANES after the per-entry metadata
     ("column_stats", pa.list_(pa.struct([
         ("name", pa.string()),
         ("kind", pa.string()),
         ("codec", pa.string()),
         ("orig_bytes", pa.int64()),
         ("enc_bytes", pa.int64()),
-        ("vmin", pa.int64()),
-        ("vmax", pa.int64()),
-        ("vsum", pa.int64()),
-        ("n_vals", pa.int64()),
-        ("null_count", pa.int64()),
-        ("fmin", pa.float64()),
-        ("fmax", pa.float64()),
-        ("smin", pa.string()),
-        ("smax", pa.string()),
-        # bloom: per-column membership sidecar (r5) — bloom words over
-        # the DISTINCT non-null lane values of scalar int-backed kinds
-        # (int/long/date/timestamp/decimal, in their codec-lane unit),
-        # same geometry/derivation as key_bloom (operators/bloom.py).
-        # Point lookups on int columns (e.g. o_orderkey under a hash
-        # layout, where every partition spans the full key range and
-        # min/max bounds barely prune) bit-test these words in pure
-        # Catalyst. Null = "may match" (pre-r5 manifests, non-int
-        # kinds, bloom=False encodes) — correctness never depends on
-        # the bloom.
-        ("bloom", pa.list_(pa.int64())),
-        # hll: distinct-count sketch sidecar (r5) — 1024 HyperLogLog
-        # registers over the SAME per-distinct-value hashes the bloom
-        # consumes (operators/bloom.py, Flajolet AofA'07). Mergeable
-        # by per-register max, so ndv_encoded answers "how many
-        # distinct values" from the manifest alone at any chunk count
-        # — the cardinality question every layout/join-strategy
-        # decision starts with. Same lanes as bloom (scalar
-        # int-backed, string, binary; int_list token lanes excluded —
-        # keeping the hot token-encode path cost-free; vocab NDV
-        # comes from build_global_dict). Null = "no sketch" (pre-r5
-        # manifests, bloom=False) — consumers must refuse to
-        # estimate, never guess.
-        ("hll", pa.list_(pa.int32())),
-        # topk: truncated value-counts summary (r5) — the chunk's 16
-        # most frequent lane values with exact counts (count desc,
-        # value asc tie-break; int lanes store the codec-lane int as
-        # a decimal string). EXACT whenever the chunk holds <= 16
-        # distinct values (then absent values provably count 0);
-        # truncated chunks set an undercount bound via their 16th
-        # count (topk_encoded sums it as merge slack). Completes the
-        # manifest-as-index trio: membership (bloom), cardinality
-        # (hll), distribution (topk) — "what's the language/domain
-        # mix" answered without reading a payload byte. Null = "no
-        # summary" (non-summarizable kinds: float, int_list, binary;
-        # bloom=False encodes; pre-r5 manifests); [] = empty chunk
-        # (exactly zero of everything).
-        ("topk", pa.list_(pa.struct([("v", pa.string()),
-                                     ("c", pa.int64())]))),
-        # hist: equi-width value histogram (r5) — 16 bucket counts
-        # over the chunk's non-null lane values, completing the
-        # manifest-as-index quartet: membership (bloom), cardinality
-        # (hll), distribution (topk), SELECTIVITY (hist). Int-backed
-        # scalar lanes bucket by offset // div with
-        # div = (vmax-vmin)//16 + 1 computed in the uint64 domain
-        # (wrap-safe for the full int64 range — the INT64_MIN lesson
-        # from cost.py applied on day one); the scalar float lane
-        # buckets (v-fmin)/(fmax-fmin)*16 clipped to [0,15], built
-        # only when both bounds are finite (±Inf bounds make
-        # equi-width edges meaningless — such chunks store null and
-        # consumers refuse, never guess). Bucket counts are EXACT, so
-        # hist_encoded answers range-count questions with RIGOROUS
-        # [min,max] bounds from the manifest alone: fully-contained
-        # buckets count exactly, edge buckets add to the upper bound.
-        # Null = "no histogram" (int_list/float_list/string/binary
-        # kinds, bloom=False encodes, non-finite float bounds, pre-r5
-        # manifests); [] = empty chunk.
-        ("hist", pa.list_(pa.int64())),
-        # qcut / fqcut: equi-DEPTH quantile cuts (r5) — the 15
-        # interior 1/16-quantile VALUES of the chunk's lane values
-        # (sorted[(j*n)//16], j = 1..15), typed per lane so no cut is
-        # ever rounded (an int64 cut through double would shift
-        # comparisons past 2^53 and break rigor). Where the
-        # equi-width hist is blind to skew (a heavy-tailed chunk
-        # piles everything into one bucket), the cuts give CDF
-        # brackets with n/16 resolution REGARDLESS of the value
-        # distribution: at cut j, at least (j*n)//16 + 1 values are
-        # <= it and at most (k*n)//16 values are <= anything below
-        # cut k — pure order statistics, comparisons only, no
-        # arithmetic on the values, so there is nothing to overflow
-        # or round. Consumers intersect this bracket with the hist
-        # bracket. Same gate as hist (sketch scalar lanes); null =
-        # "no cuts", [] = empty chunk.
-        ("qcut", pa.list_(pa.int64())),
-        ("fqcut", pa.list_(pa.float64())),
+        *STATS_LANES,
     ]))),
     # zone map for the key column: chunk-level min/max lets point and
     # range lookups prune chunks from the manifest scan (the reference's
@@ -217,24 +232,7 @@ MANIFEST_SCHEMA = pa.schema([
     ("key_bloom", pa.list_(pa.int64())),
 ])
 
-MANIFEST_SPARK_SCHEMA = (
-    "chunk_id string, part_id int, chunk_idx int, snapshot_id string, "
-    "input_file string, "
-    "n_rows long, n_values long, orig_bytes long, enc_bytes long, "
-    "checksum long, checksum_algo string, "
-    "columns array<struct<name:string,kind:string,codec:string,"
-    "params:binary,payload:binary,orig_bytes:long,enc_bytes:long>>, "
-    "column_stats array<struct<name:string,kind:string,codec:string,"
-    "orig_bytes:long,enc_bytes:long,"
-    "vmin:long,vmax:long,vsum:long,n_vals:long,null_count:long,"
-    "fmin:double,fmax:double,smin:string,smax:string,"
-    "bloom:array<bigint>,hll:array<int>,"
-    "topk:array<struct<v:string,c:bigint>>,"
-    "hist:array<bigint>,qcut:array<bigint>,"
-    "fqcut:array<double>>>, "
-    "key_col string, key_min string, key_max string, "
-    "key_bloom array<long>"
-)
+MANIFEST_SPARK_SCHEMA = from_arrow_schema(MANIFEST_SCHEMA)
 
 
 def _extract(tbl: pa.Table, name: str, kind: str):
@@ -438,6 +436,81 @@ def _float_kind(kind: str) -> bool:
     return kind in ("float", "float_list", "double_list")
 
 
+_NAN_BOUND = "NaN bound — a NaN band matches nothing by definition"
+
+
+def _int_edge(v, is_lo: bool) -> int:
+    """One int-lane band edge snapped INWARD — ceil for ``lo``, floor
+    for ``hi`` — so the integer band never admits a value outside the
+    requested one (truncation toward zero would widen a positive
+    fractional ``lo`` or a negative fractional ``hi``). Strings parse
+    exactly as decimals, never through a float."""
+    if isinstance(v, str):
+        try:
+            v = Decimal(v.strip())
+        except InvalidOperation:
+            raise ValueError(f"not a number: {v!r}") from None
+    if isinstance(v, numbers.Integral):
+        return int(v)
+    if math.isnan(v):
+        raise ValueError(_NAN_BOUND)
+    if math.isinf(v):
+        raise ValueError("infinite bound on an int lane")
+    return math.ceil(v) if is_lo else math.floor(v)
+
+
+def _float_edge(v, is_lo: bool) -> float:
+    f = float(v)
+    if math.isnan(f):
+        raise ValueError(_NAN_BOUND)
+    return f
+
+
+def _str_edge(v, is_lo: bool) -> str:
+    if not isinstance(v, str):
+        raise ValueError("string lanes take string bounds")
+    return v
+
+
+class BandLanes(NamedTuple):
+    """The range-band lanes of one kind class: the ``column_stats``
+    fields holding the chunk's lower/upper bound, and the coercion of
+    a band edge into that lane's unit."""
+    lo: str
+    hi: str
+    edge: Callable[[object, bool], object]
+
+
+# kind class -> range-band lanes. A null lower bound proves nothing;
+# a null upper bound with a lower bound present means "unbounded
+# above" (the string lane's truncation rule).
+BAND_LANES: dict[str, BandLanes] = {
+    "int": BandLanes("vmin", "vmax", _int_edge),
+    "float": BandLanes("fmin", "fmax", _float_edge),
+    "string": BandLanes("smin", "smax", _str_edge),
+}
+
+
+def band_class(kind: str) -> str | None:
+    """The range-band class of a column kind — ``"int"`` (scalar
+    int-backed), ``"float"`` or ``"string"`` — or None when the kind's
+    rows hold no scalar value a band can compare (list kinds,
+    binary)."""
+    if kind in ("float", "string"):
+        return kind
+    if _int_kind(kind) and kind != "int_list":
+        return "int"
+    return None
+
+
+def coerce_band(cls: str, lo, hi) -> tuple:
+    """``(lo, hi)`` in the lane unit of band class ``cls``; raises
+    ValueError for a bound the lane cannot compare (NaN, a non-number
+    on an int lane, a non-string on the string lane)."""
+    edge = BAND_LANES[cls].edge
+    return edge(lo, True), edge(hi, False)
+
+
 _STR_TRUNC = 16
 
 
@@ -597,110 +670,60 @@ def _entry_stats(kind: str, data, validity,
     # hll NDV registers independently, defaulting to ``bloom`` so the
     # key column still gets a sketch (there is no key-level twin)
     sketch = bloom if sketch is None else sketch
-    null_count = 0
-    if kind == "int_list":
-        values, _lengths = data
-        mask = None
-        if validity is not None:
-            row_valid, elem_valid = validity
-            if row_valid is not None:
-                null_count += int((~row_valid).sum())
-            if elem_valid is not None:
-                null_count += int((~elem_valid).sum())
-                mask = elem_valid
-        vals = values if mask is None else values[mask]
-    elif _int_kind(kind):
-        mask = None
-        if validity is not None:
-            row_valid = validity[0]
-            if row_valid is not None:
-                null_count += int((~row_valid).sum())
-                mask = row_valid
-        vals = data if mask is None else data[mask]
-    elif _float_kind(kind):
-        # typed double zone map: bounds over non-null, non-NaN values
-        # (a finite-bound range predicate never matches NaN in Spark,
-        # so NaN-free bounds prune exactly); all-NaN/all-null chunks
-        # get null bounds — kept conservatively, never pruned. No
-        # vsum lane: float addition isn't exact/order-independent.
-        if kind == "float":
-            mask = None
-            if validity is not None and validity[0] is not None:
-                null_count += int((~validity[0]).sum())
-                mask = validity[0]
-            fvals = data if mask is None else data[mask]
-        else:
-            values, _lengths = data
-            mask = None
-            if validity is not None:
-                row_valid, elem_valid = validity
-                if row_valid is not None:
-                    null_count += int((~row_valid).sum())
-                if elem_valid is not None:
-                    null_count += int((~elem_valid).sum())
-                    mask = elem_valid
-            fvals = values if mask is None else values[mask]
-        finite = fvals[~np.isnan(fvals)] if len(fvals) else fvals
-        # hist/qcut over the scalar float lane only: float_list
-        # element summaries (embedding dimensions pooled) answer no
-        # range question a consumer asks, and the lane is the bulk of
-        # the bytes — same cost logic as the int_list sketch exclusion
-        hist = _hist_float(finite) if sketch and kind == "float" \
-            else None
-        fq = None
-        if hist is not None:        # co-gated: ±Inf bounds drop both
-            fq = _qcut_vals(finite) if len(finite) else []
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": len(fvals), "null_count": null_count,
-                "fmin": float(finite.min()) if len(finite) else None,
-                "fmax": float(finite.max()) if len(finite) else None,
-                "smin": None, "smax": None, "bloom": None,
-                "hll": None, "topk": None, "hist": hist,
-                "qcut": None, "fqcut": fq}
-    elif kind == "string":
-        # string zone map (r5): truncate(16) bounds, Iceberg
-        # semantics — smin a prefix of the true min (lower bound),
-        # smax the true max or its bumped prefix (upper bound, null =
-        # unbounded above). min/max runs vectorized on a zero-copy
-        # rebuild of the Arrow array; UTF-8 byte order equals
-        # codepoint order, so Python/Spark/Arrow comparisons agree.
+    import pyarrow.compute as pc
+
+    from .bloom import (HLL_M, bloom_from_hashes, hll_from_hashes,
+                        int_hashes, string_hashes)
+
+    # one all-None row from the lane table; each kind sets only the
+    # lanes it fills
+    st = dict.fromkeys(name for name, _ in STATS_LANES)
+    row_valid, elem_valid = validity if validity is not None \
+        else (None, None)
+    st["null_count"] = sum(int((~v).sum()) for v in (row_valid, elem_valid)
+                           if v is not None)
+    if kind in ("string", "binary"):
+        # binary carries no zone map (byte-order bounds carry no prune
+        # value) and keeps n_vals None — consumers (agg_encoded, verify
+        # --stats) key off that — nor topk (digest columns are
+        # near-unique; a truncated histogram says nothing)
+        if kind == "binary" and not (bloom or sketch):
+            return st
         blob, offs = data
-        n = len(offs) - 1
-        row_valid = validity[0] if validity is not None else None
-        if row_valid is not None:
-            null_count += int((~row_valid).sum())
         arr = pa.Array.from_buffers(
-            pa.large_utf8(), n,
+            pa.large_utf8() if kind == "string" else pa.large_binary(),
+            len(offs) - 1,
             [None, pa.py_buffer(np.ascontiguousarray(offs)),
              pa.py_buffer(blob)])
         if row_valid is not None:
             arr = arr.filter(pa.array(row_valid))
-        if len(arr) == 0:
-            from .bloom import HLL_M
-
-            return {"vmin": None, "vmax": None, "vsum": None,
-                    "n_vals": 0, "null_count": null_count,
-                    "fmin": None, "fmax": None,
-                    "smin": None, "smax": None, "bloom": None,
-                    "hll": [0] * HLL_M if sketch else None,
-                    "topk": [] if sketch else None,
-                    "hist": None, "qcut": None, "fqcut": None}
-        import pyarrow.compute as pc
-
-        mm = pc.min_max(arr)
-        blm = hll = topk = None
-        if bloom or sketch:
-            # string membership + sketch sidecars (r5): bloom words,
-            # HLL registers, AND the top-16 value-counts summary over
-            # ONE distinct pass (value_counts) — same hash family as
-            # the key bloom (hash_key over UTF-8 bytes), so point
-            # probes on non-key string columns prune under hash
-            # layouts where smin/smax span the whole domain,
-            # ndv_encoded estimates distincts, and topk_encoded
-            # answers value-distribution questions from the manifest
-            from .bloom import (bloom_from_hashes, hll_from_hashes,
-                                string_hashes)
-
+        if kind == "string":
+            # string zone map (r5): truncate(16) bounds, Iceberg
+            # semantics — smin a prefix of the true min (lower bound),
+            # smax the true max or its bumped prefix (upper bound,
+            # null = unbounded above). min/max runs vectorized on a
+            # zero-copy rebuild of the Arrow array; UTF-8 byte order
+            # equals codepoint order, so Python/Spark/Arrow comparisons
+            # agree.
+            st["n_vals"] = len(arr)
+            if len(arr):
+                mm = pc.min_max(arr)
+                st["smin"] = _trunc_lower(mm["min"].as_py())
+                st["smax"] = _trunc_upper(mm["max"].as_py())
+        if not len(arr):
+            if sketch:
+                st["hll"] = [0] * HLL_M
+                if kind == "string":
+                    st["topk"] = []
+        elif bloom or sketch:
+            # membership + sketch sidecars (r5): bloom words, HLL
+            # registers AND the top-16 value counts over ONE distinct
+            # pass (value_counts) — same hash family as the key bloom
+            # (hash_key over the UTF-8/raw bytes), so point probes on
+            # non-key string/binary columns prune under hash layouts
+            # where bounds span the whole domain, ndv_encoded estimates
+            # distincts, and topk_encoded answers value-distribution
+            # questions from the manifest
             vc = pc.value_counts(arr)
             u = vc.field("values")
             uoff = np.frombuffer(u.buffers()[1], np.int64)
@@ -710,124 +733,70 @@ def _entry_stats(kind: str, data, validity,
                 if ubuf is not None else b""
             h1 = string_hashes(ublob, uoff - uoff[0])
             if bloom:
-                blm = bloom_from_hashes(h1)
+                st["bloom"] = bloom_from_hashes(h1)
             if sketch:
-                hll = hll_from_hashes(h1)
-                topk = _topk_str(u, vc.field("counts").to_numpy())
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": len(arr), "null_count": null_count,
-                "fmin": None, "fmax": None,
-                "smin": _trunc_lower(mm["min"].as_py()),
-                "smax": _trunc_upper(mm["max"].as_py()),
-                "bloom": blm, "hll": hll, "topk": topk,
-                "hist": None, "qcut": None, "fqcut": None}
-    elif kind == "binary":
-        # binary membership sidecar (r5): bloom over the distinct
-        # byte values — content-digest point lookups (media hashes,
-        # dedup keys stored as raw bytes) prune like the string lane;
-        # no zone map (byte order bounds carry no prune value)
-        blob, offs = data
-        n = len(offs) - 1
-        row_valid = validity[0] if validity is not None else None
-        if row_valid is not None:
-            null_count += int((~row_valid).sum())
-        blm = hll = None
-        if bloom or sketch:
-            from .bloom import (HLL_M, bloom_from_hashes,
-                                hll_from_hashes, string_hashes)
-
-            arr = pa.Array.from_buffers(
-                pa.large_binary(), n,
-                [None, pa.py_buffer(np.ascontiguousarray(offs)),
-                 pa.py_buffer(blob)])
-            if row_valid is not None:
-                arr = arr.filter(pa.array(row_valid))
-            if len(arr):
-                import pyarrow.compute as pc
-
-                u = pc.unique(arr)
-                uoff = np.frombuffer(u.buffers()[1], np.int64)
-                uoff = uoff[u.offset:u.offset + len(u) + 1]
-                ubuf = u.buffers()[2]
-                ublob = np.frombuffer(
-                    ubuf, np.uint8)[uoff[0]:uoff[-1]] \
-                    if ubuf is not None else b""
-                h1 = string_hashes(ublob, uoff - uoff[0])
-                if bloom:
-                    blm = bloom_from_hashes(h1)
-                if sketch:
-                    hll = hll_from_hashes(h1)
-            elif sketch:
-                hll = [0] * HLL_M
-        # n_vals stays None: binary carries no numeric agg lanes, and
-        # consumers (agg_encoded, verify --stats) key off that; no
-        # topk either (bytes don't fit the string lane, and digest
-        # columns are near-unique — a truncated histogram says nothing)
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": None, "null_count": null_count,
-                "fmin": None, "fmax": None, "smin": None,
-                "smax": None, "bloom": blm, "hll": hll,
-                "topk": None, "hist": None, "qcut": None,
-                "fqcut": None}
-    else:
-        if validity is not None:
-            for v in validity:
-                if v is not None:
-                    null_count += int((~v).sum())
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": None, "null_count": null_count,
-                "fmin": None, "fmax": None, "smin": None,
-                "smax": None, "bloom": None, "hll": None,
-                "topk": None, "hist": None, "qcut": None,
-                "fqcut": None}
-    if len(vals) == 0:
-        from .bloom import HLL_M
-
-        scalar_sketch = sketch and kind != "int_list"
-        return {"vmin": None, "vmax": None, "vsum": 0,
-                "n_vals": 0, "null_count": null_count,
-                "fmin": None, "fmax": None, "smin": None,
-                "smax": None, "bloom": None,
-                "hll": [0] * HLL_M if scalar_sketch else None,
-                "topk": [] if scalar_sketch else None,
-                "hist": [] if scalar_sketch else None,
-                "qcut": [] if scalar_sketch else None,
-                "fqcut": None}
+                st["hll"] = hll_from_hashes(h1)
+                if kind == "string":
+                    st["topk"] = _topk_str(
+                        u, vc.field("counts").to_numpy())
+        return st
+    if not (_int_kind(kind) or _float_kind(kind)):
+        return st
+    values, mask = (data[0], elem_valid) if kind.endswith("_list") \
+        else (data, row_valid)
+    vals = values if mask is None else values[mask]
+    st["n_vals"] = len(vals)
+    if _float_kind(kind):
+        # typed double zone map: bounds over non-null, non-NaN values
+        # (a finite-bound range predicate never matches NaN in Spark,
+        # so NaN-free bounds prune exactly); all-NaN/all-null chunks
+        # get null bounds — kept conservatively, never pruned. No
+        # vsum lane: float addition isn't exact/order-independent.
+        finite = vals[~np.isnan(vals)] if len(vals) else vals
+        if len(finite):
+            st["fmin"] = float(finite.min())
+            st["fmax"] = float(finite.max())
+        # hist/qcut over the scalar float lane only: float_list
+        # element summaries (embedding dimensions pooled) answer no
+        # range question a consumer asks, and the lane is the bulk of
+        # the bytes — same cost logic as the int_list sketch exclusion
+        if sketch and kind == "float":
+            st["hist"] = _hist_float(finite)
+            if st["hist"] is not None:  # co-gated: ±Inf bounds drop both
+                st["fqcut"] = _qcut_vals(finite) if len(finite) else []
+        return st
+    # int_list lanes (token arrays) carry bounds/sum/count only: element
+    # membership isn't a chunk-prune predicate, the vocabulary would
+    # saturate the filter, and the per-chunk unique over millions of
+    # token elements would tax the hot encode path (vocab NDV comes
+    # from build_global_dict instead)
+    scalar = kind != "int_list"
+    if not len(vals):
+        st["vsum"] = 0
+        if sketch and scalar:
+            st.update(hll=[0] * HLL_M, topk=[], hist=[], qcut=[])
+        return st
     vmin = int(vals.min())
     vmax = int(vals.max())
+    st["vmin"], st["vmax"] = vmin, vmax
     if max(abs(vmin), abs(vmax)) * len(vals) < (1 << 62):
-        vsum = int(vals.sum(dtype=np.int64))
-    else:
-        vsum = None
-    blm = hll = topk = None
-    if (bloom or sketch) and kind != "int_list":
+        st["vsum"] = int(vals.sum(dtype=np.int64))
+    if (bloom or sketch) and scalar:
         # scalar int lane: membership + sketch sidecars over ONE
-        # distinct pass (operators/bloom.py) — int_list lanes (token
-        # arrays) are excluded: element membership isn't a
-        # chunk-prune predicate, the vocabulary would saturate the
-        # filter, and the per-chunk unique over millions of token
-        # elements would tax the hot encode path (vocab NDV comes
-        # from build_global_dict instead)
-        from .bloom import (bloom_from_hashes, hll_from_hashes,
-                            int_hashes)
-
+        # distinct pass (operators/bloom.py)
         u, counts = np.unique(np.asarray(vals, np.int64),
                               return_counts=True)
         h1 = int_hashes(u)
         if bloom:
-            blm = bloom_from_hashes(h1)
+            st["bloom"] = bloom_from_hashes(h1)
         if sketch:
-            hll = hll_from_hashes(h1)
-            topk = _topk_int(u, counts)
-    # hist shares the sketch gate and the scalar-int-only rule
-    # (int_list token lanes stay cost-free on the hot encode path)
-    hist = _hist_int(vals) if sketch and kind != "int_list" else None
-    qcut = _qcut_vals(vals) if hist is not None else None
-    return {"vmin": vmin, "vmax": vmax, "vsum": vsum,
-            "n_vals": len(vals), "null_count": null_count,
-            "fmin": None, "fmax": None, "smin": None, "smax": None,
-            "bloom": blm, "hll": hll, "topk": topk, "hist": hist,
-            "qcut": qcut, "fqcut": None}
+            st["hll"] = hll_from_hashes(h1)
+            st["topk"] = _topk_int(u, counts)
+    if sketch and scalar:
+        # hist/qcut share the sketch gate and the scalar-only rule
+        st["hist"] = _hist_int(vals)
+        st["qcut"] = _qcut_vals(vals)
+    return st
 
 
 def _key_bounds(tbl: pa.Table, specs: list[tuple[str, str]],

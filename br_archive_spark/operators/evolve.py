@@ -880,42 +880,30 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
     import pyarrow.compute as pc  # noqa: F401  (parity with delete_rows)
 
     from .chunk import decode_column
-    from .decode import (_fstats_disjoint, _has_float_stats,
-                         _has_numeric_stats, _stats_disjoint,
-                         manifest_specs)
-    from .encode import _float_kind, _int_kind
+    from .decode import _band_disjoint, _has_lane, manifest_specs
+    from .encode import BAND_LANES, band_class, coerce_band
 
     specs = specs or manifest_specs(encoded)
     known = dict(specs)
     kind = known.get(column)
     if kind is None:
         raise ValueError(f"delete_where: {column!r} not in specs")
-    is_float = kind == "float"
-    if is_float:
-        import math
-
-        lo, hi = float(lo), float(hi)
-        if math.isnan(lo) or math.isnan(hi):
-            raise ValueError("delete_where: NaN bound — a NaN band "
-                             "matches nothing by definition")
-        have_stats = _has_float_stats(encoded)
-        disjoint = _fstats_disjoint(column, lo, hi)
-    elif _int_kind(kind) and kind != "int_list":
-        import math
-
-        # snap INWARD so the effective integer band is always
-        # contained in the requested band — int() truncates toward
-        # zero, which WIDENS a negative fractional bound (hi=-3.7 ->
-        # -3 would delete value -3 the caller asked to keep)
-        lo, hi = math.ceil(lo), math.floor(hi)
-        have_stats = _has_numeric_stats(encoded)
-        disjoint = _stats_disjoint(column, lo, hi)
-    else:
+    cls = band_class(kind)
+    if cls not in ("int", "float"):
         hint = (" (list kinds have no scalar row value)"
-                if kind == "int_list" or _float_kind(kind) else "")
+                if kind.endswith("_list") else "")
         raise ValueError(
             f"delete_where: column {column!r} (kind {kind!r}) carries "
             f"no scalar numeric zone map{hint}")
+    # int lanes snap INWARD so the effective integer band is always
+    # contained in the requested band (hi=-3.7 -> -4, never -3)
+    try:
+        lo, hi = coerce_band(cls, lo, hi)
+    except ValueError as e:
+        raise ValueError(f"delete_where: {e}") from None
+    is_float = cls == "float"
+    have_stats = _has_lane(encoded, BAND_LANES[cls].lo)
+    disjoint = _band_disjoint(cls, column, lo, hi)
     if have_stats:
         untouched = encoded.where(disjoint)
         touched = encoded.where(~disjoint)

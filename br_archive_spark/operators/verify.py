@@ -119,8 +119,9 @@ def verify_stats(encoded: DataFrame,
     corruption. Analog of the reference's `-t` test mode generalized
     from payload checksums to derived metadata.
     """
-    from .decode import _int_view, agg_encoded, manifest_specs
-    from .encode import _float_kind, _int_kind
+    from .decode import (_has_lane, _int_view, agg_encoded, hist_encoded,
+                         manifest_specs, ndv_encoded, topk_encoded)
+    from .encode import _float_kind, _int_kind, band_class
 
     specs = specs or manifest_specs(encoded)
     dec = decode_table(encoded, specs=specs, with_n_tok=False)
@@ -183,9 +184,7 @@ def verify_stats(encoded: DataFrame,
     # so for fixed data this is a fixed — not flaky — check). Columns
     # without a sketch (float/int_list kinds, bloom=False encodes,
     # pre-r5 manifests) are skipped, never guessed at.
-    from .decode import _has_hll, ndv_encoded
-
-    if _has_hll(encoded):
+    if _has_lane(encoded, "hll"):
         for name, _kind in specs:
             try:
                 est = ndv_encoded(encoded, name)
@@ -203,9 +202,7 @@ def verify_stats(encoded: DataFrame,
     # must EQUAL the decoded GROUP BY's top values; at slack > 0
     # every reported count must be a lower bound within slack of the
     # true count (truncation only ever drops occurrences).
-    from .decode import _has_topk, _int_view, topk_encoded
-
-    if _has_topk(encoded):
+    if _has_lane(encoded, "topk"):
         for name, kind in specs:
             try:
                 top, slack = topk_encoded(encoded, name, k=5)
@@ -238,13 +235,11 @@ def verify_stats(encoded: DataFrame,
     # without the lane (string/binary/list kinds, bloom=False
     # encodes, ±Inf float chunks, pre-r5 manifests) are skipped —
     # hist_encoded refuses for them by design.
-    from .decode import _has_hist, hist_encoded
-
-    if _has_hist(encoded):
+    if _has_lane(encoded, "hist"):
         for name, kind in specs:
             if kind == "float":
                 lane = F.when(~F.isnan(F.col(name)), F.col(name))
-            elif _int_kind(kind) and kind != "int_list":
+            elif band_class(kind) == "int":
                 lane = _int_view(name, kind)
             else:
                 continue
@@ -281,11 +276,9 @@ def _verify_string_lanes(encoded, dec, name: str):
     manifest's smin must sort <= the decoded min and its smax (when
     present; null = declared unbounded above) >= the decoded max.
     Count lanes stay exact."""
-    from pyspark.sql import functions as F
+    from .decode import _has_lane, agg_encoded
 
-    from .decode import _has_string_stats, agg_encoded
-
-    if not _has_string_stats(encoded):
+    if not _has_lane(encoded, "smin"):
         return {"ok": True, "skipped": "manifest predates string "
                 "stats (no smin/smax lanes)"}, True
     truth = dec.agg(
@@ -314,11 +307,9 @@ def _verify_float_lanes(encoded, dec, name: str, kind: str):
     bounds plus count lanes vs a full decode. NaN is excluded from the
     decoded min/max exactly as encode excludes it from the recorded
     bounds; no vsum lane exists for floats (sums always decode)."""
-    from pyspark.sql import functions as F
+    from .decode import _has_lane, agg_encoded
 
-    from .decode import _has_float_stats, agg_encoded
-
-    if not _has_float_stats(encoded):
+    if not _has_lane(encoded, "fmin"):
         return {"ok": True, "skipped": "manifest predates float "
                 "stats (no fmin/fmax lanes)"}, True
     extra_nulls = 0

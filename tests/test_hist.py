@@ -207,6 +207,24 @@ def test_hist_cli_agg_count_between(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     cb = out["count_between"]
     assert cb["count_min"] <= 250 <= cb["count_max"]
+    # int lanes snap fractional bounds inward: [199.5, 300] holds no
+    # integer value of v (max 199), [49.5, 59.2] is exactly [50, 59]
+    for band, lo, hi in (("199.5:300", 200, 300), ("49.5:59.2", 50, 59)):
+        args = Namespace(input=man_dir, column="v", ndv=False, topk=0,
+                         count_between=band,
+                         master="local[2]", shuffle_partitions=4)
+        assert cmd_agg(args) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        cb = out["count_between"]
+        assert (cb["lo"], cb["hi"]) == (lo, hi)
+        exact = sum(25 for x in range(200) if lo <= x <= hi)
+        assert cb["count_min"] <= exact <= cb["count_max"], band
+    # a malformed band is a usage error, not a traceback
+    for band in ("a:b:c", "5", "x:7"):
+        args = Namespace(input=man_dir, column="v", ndv=False, topk=0,
+                         count_between=band,
+                         master="local[2]", shuffle_partitions=4)
+        assert cmd_agg(args) == 2, band
 
 
 def test_hist_never_reads_payload(spark):

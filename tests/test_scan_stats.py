@@ -418,6 +418,21 @@ def test_cli_scan_null_flags(spark, tmp_path, capsys):
                               not_null=True)) == 2
     assert cmd_scan(Namespace(**base, column="note", null=False,
                               not_null=False)) == 2
+    # int lanes snap fractional bounds inward (ceil lo, floor hi) —
+    # truncating 100.5 would admit cents == 100; a bound that is not
+    # a number is a usage error
+    exact = src.where(F.col("cents").between(101, 2000)).count()
+    band = {**base, "lo": "100.5", "hi": "2000.7"}
+    assert cmd_scan(Namespace(**band, column="cents", null=False,
+                              not_null=False)) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (out["lo"], out["hi"], out["rows"]) == (101, 2000, exact)
+    assert cmd_scan(Namespace(**band, column="cents", null=False,
+                              not_null=False, estimate=True)) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["rows_bracket"][0] <= exact <= out["rows_bracket"][1]
+    assert cmd_scan(Namespace(**{**band, "lo": "abc"}, column="cents",
+                              null=False, not_null=False)) == 2
 
 
 def test_scan_where_null_bands_list_kind_conservative(spark):
@@ -440,6 +455,12 @@ def test_scan_where_null_bands_list_kind_conservative(spark):
                  scan_where(enc, [], specs=specs, with_n_tok=False,
                             not_null_cols=["toks"]).collect())
     assert got == list(range(200))
+    # a projection without the int_list column decodes no n_tok, so
+    # the result carries none (the default with_n_tok=True included)
+    got = scan_where(enc, [("okey", 10, 19)], specs=specs,
+                     project=["okey"])
+    assert got.columns == ["okey"]
+    assert sorted(r["okey"] for r in got.collect()) == list(range(10, 20))
 
 
 def test_scan_range_projection(spark, encoded):
@@ -1243,3 +1264,41 @@ def test_scan_where_files_multi_predicate(spark, tmp_path):
     assert scan_where_files(spark, man_dir, [("okey", 10 ** 6,
                                               2 * 10 ** 6)],
                             specs=specs, with_n_tok=False).count() == 0
+    # ...with the same columns as a non-empty result: no int_list
+    # column, so no n_tok on either path
+    hit = scan_where_files(spark, man_dir, [("okey", 5, 6)], specs=specs)
+    miss = scan_where_files(spark, man_dir, [("okey", 10 ** 6, 10 ** 7)],
+                            specs=specs)
+    assert hit.columns == miss.columns == [n for n, _ in specs]
+    # predicates are validated before the prune pass, as scan_where
+    # validates them
+    for bands, nn in (([("nope", 0, 1)], None), ([], ["nope"])):
+        with pytest.raises(ValueError, match="not in encode specs"):
+            scan_where_files(spark, man_dir, bands, specs=specs,
+                             not_null_cols=nn)
+    with pytest.raises(ValueError, match="NaN bound"):
+        scan_where_files(spark, man_dir, [("okey", float("nan"), 1)],
+                         specs=specs)
+
+
+
+def test_band_coercion_is_exact_and_inward():
+    """Band edges reach a lane in its own unit: int lanes ceil lo and
+    floor hi, parse strings exactly (no float round trip), and refuse
+    NaN and non-numbers; float lanes refuse NaN; string lanes take
+    strings only."""
+    import numpy as np
+
+    from br_archive_spark.operators.encode import coerce_band
+
+    big = 2 ** 53 + 1                      # not representable as double
+    assert coerce_band("int", str(big), "-3.7") == (big, -4)
+    assert coerce_band("int", "2.5", " 4 ") == (3, 4)
+    assert coerce_band("int", np.int64(-5), 1e3) == (-5, 1000)
+    assert coerce_band("float", "0.5", 2) == (0.5, 2.0)
+    assert coerce_band("string", "a", "b") == ("a", "b")
+    for cls, lo, hi in (("int", float("nan"), 1), ("int", "nan", 1),
+                        ("int", "a:b", 1), ("int", 0, float("inf")),
+                        ("float", 0, float("nan")), ("string", 1, "b")):
+        with pytest.raises(ValueError):
+            coerce_band(cls, lo, hi)
